@@ -32,8 +32,6 @@ Scale rules encoded here:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -82,21 +80,13 @@ def _min_label_from_sym(sym: DataFrame, max_iter: int) -> DataFrame:
         )
     )
 
-    # ONE job per round where two ran before (r15, VERDICT r14 item
-    # 7): the round's materialization and its convergence probe fuse.
-    # localCheckpoint(eager=False) cuts the lineage IMMEDIATELY (the
-    # returned frame's plan is a LogicalRDD -- without the cut, labels
-    # appears twice per round and the logical tree DOUBLES each round:
-    # the eager-probe experiment OOM'd the driver generating a
-    # 2^k-node tree on a deep chain), while the checkpoint blocks are
-    # materialized BY the changed-count action -- one scheduled job
-    # where eager localCheckpoint + count paid two driver round-trips
-    # per round (pure scheduling latency on the small, shallow graphs
-    # dedup produces). The RELIABLE-checkpoint production mode
-    # (SPARK_GRAFT_CHECKPOINT_DIR, VERDICT r12 item 5) keeps the
-    # eager stage_df path: reliable checkpoint() re-runs the frame's
-    # computation to write the files, so fusing buys nothing there.
-    reliable = bool(os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR"))
+    # Each round stages LAZILY (stage_df(eager=False), whose docstring
+    # carries the measured job count): the lineage cut is immediate --
+    # without it labels appears twice per round and the logical tree
+    # DOUBLES each round (the eager-probe experiment OOM'd the driver
+    # generating a 2^k-node tree on a deep chain) -- while the local
+    # checkpoint blocks are written by the changed-count action below
+    # instead of by a separate eager materialization job.
     changed = -1  # max_iter <= 0 must hit the non-convergence raise
     for _ in range(max_iter):
         neigh_min = (
@@ -117,13 +107,10 @@ def _min_label_from_sym(sym: DataFrame, max_iter: int) -> DataFrame:
                 F.col("comp").alias("old_comp"),
             )
         )
-        if reliable:
-            new_labels = stage_df(new_labels)  # cut lineage every round
-        else:
-            new_labels = new_labels.localCheckpoint(eager=False)
+        new_labels = stage_df(new_labels, eager=False)
         changed = new_labels.filter(
             F.col("comp") != F.col("old_comp")
-        ).count()  # the lazy path's one job: checkpoint + probe
+        ).count()  # also writes the round's checkpoint blocks
         labels = new_labels.select("id", "comp")
         if changed == 0:
             break

@@ -32,7 +32,7 @@ silently mis-add offsets. A pure-function `_pid` is branch-safe BY
 CONSTRUCTION -- re-evaluating it anywhere always yields the same
 bucket -- and the explicit range exchange disappears entirely (the
 window's hash exchange on (group, _pid) does the placement). The
-input is ALSO staged once (localCheckpoint, see _bucketed) so the
+input is ALSO staged once (staging.stage_df, see _bucketed) so the
 three consumers (sketch, window, offsets) evaluate the upstream one
 time -- for q_budget_select the upstream is a tokenization pass worth
 seconds per duplicate evaluation.
@@ -56,6 +56,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from discogs_xml_to_parquet_spark.staging import stage_df
 
 _PARTS = 32  # buckets; size to executor count at scale
 
@@ -101,9 +103,9 @@ def _bucketed(
     monotone along the order, pure per row (branch-safe -- see module
     docstring).
 
-    `stage` localCheckpoints the input first: the operator consumes it
-    in THREE places (boundary sketch, within-bucket window, offsets
-    aggregate), and staging turns that into one upstream evaluation +
+    `stage` runs the input through staging.stage_df first: the
+    operator consumes it in THREE places (boundary sketch,
+    within-bucket window, offsets aggregate), and staging turns that into one upstream evaluation +
     two cheap re-reads (measured: materializing the 583k-row sf0.1
     price domain costs ~0.2 s over computing it; re-read 0.17 s;
     recomputing an expensive upstream like q_budget_select's
@@ -122,7 +124,7 @@ def _bucketed(
     can derive one) for this domain. Purely a balance input, same as
     the sketch it replaces."""
     if stage:
-        df = df.localCheckpoint()
+        df = stage_df(df)
     name, desc = _leading(df, order_cols)
     if bounds is None:
         bounds = quantile_bounds(df, name, parts)

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from discogs_xml_to_parquet_spark.operators import prefix as P
 from discogs_xml_to_parquet_spark.registry import query
+from discogs_xml_to_parquet_spark.staging import stage_df
 from discogs_xml_to_parquet_spark.tables import load
 
 _ORDER_CAP = 8  # max parts per order entering the pair join
@@ -89,14 +90,14 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("e.u", "e.v")
         .distinct()
-        .localCheckpoint()
+        .transform(stage_df)
     )
     deg = (
         edges.select(F.col("u").alias("n"))
         .unionAll(edges.select(F.col("v").alias("n")))
         .groupBy("n")
         .agg(F.count(F.lit(1)).alias("deg"))
-        .localCheckpoint()
+        .transform(stage_df)
     )
     du = deg.select(F.col("n").alias("u"), F.col("deg").alias("du"))
     dv = deg.select(F.col("n").alias("v"), F.col("deg").alias("dv"))

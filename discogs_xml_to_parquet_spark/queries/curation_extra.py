@@ -34,6 +34,7 @@ from discogs_xml_to_parquet_spark.queries.clustering import (
     kmeans_assign,
 )
 from discogs_xml_to_parquet_spark.registry import query
+from discogs_xml_to_parquet_spark.staging import stage_df
 from discogs_xml_to_parquet_spark.tables import load, load_spread
 
 _CH = 4  # tokens per dedup chunk (non-overlapping; the "line" unit)
@@ -265,7 +266,7 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     # within-cluster pair join itself)
     asg = kmeans_assign(e, c).select(
         "vec_id", "cluster_id", "v"
-    ).withColumn("nrm", F.sqrt(V.norm2(F.col("v")))).localCheckpoint()
+    ).withColumn("nrm", F.sqrt(V.norm2(F.col("v")))).transform(stage_df)
     a, b = asg.alias("a"), asg.alias("b")
     drops = (
         a.join(

@@ -43,6 +43,7 @@ from discogs_xml_to_parquet_spark.queries.quality import (
     gopher_keep_filter,
 )
 from discogs_xml_to_parquet_spark.registry import query
+from discogs_xml_to_parquet_spark.staging import stage_df
 from discogs_xml_to_parquet_spark.tables import load_spread
 
 # minhash chain re-scoped to the quality survivors; strip its leading
@@ -178,7 +179,7 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapsed = (
         quality_score(token_stats(canonical))
         .select("doc_id", "text", "n_tokens", "quality_score")
-        .localCheckpoint()
+        .transform(stage_df)
     )
     near = minhash_near_dup_pairs(
         spark, sf_dir, docs=collapsed.select("doc_id", "text")

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from discogs_xml_to_parquet_spark.registry import query
+from discogs_xml_to_parquet_spark.staging import stage_df
 from discogs_xml_to_parquet_spark.tables import load
 
 # fixed-width value bins: events.value sits in [0, ~500); 10 bins of 50
@@ -101,7 +102,7 @@ def q_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         # stage the (groups x bins)-row table once so the corpus is
         # scanned exactly once (same multi-consumer contract as Q15's
         # revenue view and the CMS counter table)
-        .localCheckpoint()
+        .transform(stage_df)
     )
     w_tot = (
         binned.groupBy("event_type")

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from discogs_xml_to_parquet_spark.operators import prefix as P
 from discogs_xml_to_parquet_spark.registry import query
+from discogs_xml_to_parquet_spark.staging import stage_df
 from discogs_xml_to_parquet_spark.tables import load
 
 # shared final-expression text (Spark selectExpr == DuckDB outer
@@ -118,7 +119,7 @@ def q_stats_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     # staged too: it feeds both the deviation join and the output.
     vc = li.groupBy(
         F.col("l_returnflag").alias("g"), F.col("l_extendedprice").alias("v")
-    ).agg(F.count(F.lit(1)).alias("cnt")).localCheckpoint()
+    ).agg(F.count(F.lit(1)).alias("cnt")).transform(stage_df)
     # ONE boundary sketch serves BOTH selection passes (r15, VERDICT
     # r14 item 8): the deviation domain |v - med| doesn't need its own
     # approxQuantile action -- its bucket boundaries derive
@@ -131,7 +132,7 @@ def q_stats_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     # action + domain pass per run.
     bounds1 = P.quantile_bounds(vc, "v")
     med1 = _median_of(
-        vc, "g", "v", stage=False, bounds=bounds1).localCheckpoint()
+        vc, "g", "v", stage=False, bounds=bounds1).transform(stage_df)
     med_star = bounds1[len(bounds1) // 2] if bounds1 else 0.0
     dev_bounds = sorted(abs(b - med_star) for b in bounds1)
     dev = (

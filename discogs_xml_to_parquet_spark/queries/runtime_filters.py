@@ -39,6 +39,7 @@ from discogs_xml_to_parquet_spark.functions.exact import dsum, rev_sql
 from discogs_xml_to_parquet_spark.registry import query
 from discogs_xml_to_parquet_spark.staging import (
     source_fingerprint,
+    stage_df,
     staged,
 )
 from discogs_xml_to_parquet_spark.tables import load
@@ -216,7 +217,7 @@ def skew_lane(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language mean-length join-back over the multilingual corpus:
     fact = documents keyed by lang (en dominates -- the Zipf language
     mix every multilingual training corpus has), dim = per-lang totals.
-    The dim is staged (localCheckpoint, 5 rows) so the join sees it
+    The dim is staged (stage_df, 5 rows) so the join sees it
     through a plain ensure-requirements exchange -- adjacent to its
     aggregate the SMJ children would not match AQE's skew pattern --
     and the downstream aggregate keys on source (not lang), so the
@@ -230,7 +231,7 @@ def skew_lane(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.groupBy("lang")
         .agg(F.sum("n_chars").alias("sum_c"),
              F.count(F.lit(1)).alias("n_l"))
-        .localCheckpoint()
+        .transform(stage_df)
     )
     return (
         docs.join(per_lang, "lang")

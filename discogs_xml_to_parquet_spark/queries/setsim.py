@@ -109,6 +109,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from discogs_xml_to_parquet_spark.registry import query
 from discogs_xml_to_parquet_spark.staging import stage_df
@@ -360,12 +361,17 @@ def setsim_pairs(docs: DataFrame,
     # gated), so its groupBy + checkpoint runs on a second driver
     # thread while this thread collects the stats row -- two
     # independent jobs back-filling each other's stragglers instead
-    # of two serial rungs of the staging ladder.
+    # of two serial rungs of the staging ladder. Both pool targets go
+    # through `inherit`, which copies this thread's local properties
+    # (job group, scheduler pool) and session tags into the worker, so
+    # the overlapped jobs stay attributable to -- and cancellable
+    # with -- the caller's job group.
     from concurrent.futures import ThreadPoolExecutor
 
+    inherit = inheritable_thread_target(docs.sparkSession)
     with ThreadPoolExecutor(max_workers=1) as pool:
         tok_dict_fut = pool.submit(
-            lambda: stage_df(_token_dict(sets)))
+            inherit(lambda: stage_df(_token_dict(sets))))
         set_stats = (
             sets.agg(
                 F.count(F.lit(1)).alias("rows"),
@@ -427,14 +433,14 @@ def setsim_pairs(docs: DataFrame,
         )
 
     with ThreadPoolExecutor(max_workers=1) as pool:
-        members_fut = pool.submit(_stage_members)
+        members_fut = pool.submit(inherit(_stage_members))
         # 2. every (set, token) row with its interned tid and rarity
         # position (see _ranked_tokens), staged ONCE: the prefix
         # filter (both sides of the candidate self-join), and the
-        # verification-array rebuild below, all read it. The window's
-        # exchange left the staged partitions keyed by sid, so the
-        # groupBy(sid) that re-assembles each set's SORTED LONG array
-        # adds no shuffle.
+        # verification-array rebuild below, all read it. The groupBy(sid)
+        # that re-assembles each set's SORTED LONG array re-shuffles on
+        # sid: the staged frame's LogicalRDD does not carry the window's
+        # sid partitioning (see stage_df).
         ranked = stage_df(
             _ranked_tokens(sets, bc_dict=bc_dict, tok_dict=tok_dict))
         isets = (

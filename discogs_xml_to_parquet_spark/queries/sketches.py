@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from discogs_xml_to_parquet_spark.registry import query
+from discogs_xml_to_parquet_spark.staging import stage_df
 from discogs_xml_to_parquet_spark.tables import load
 
 
@@ -228,7 +229,7 @@ def q_freq_items_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle consumer -- measured). ~14k rows at any data size.
     cms = cells.groupBy("rc.r", "rc.c").agg(
         F.count(F.lit(1)).alias("n")
-    ).localCheckpoint()
+    ).transform(stage_df)
     exact = (
         li.groupBy("l_suppkey")
         .agg(F.count(F.lit(1)).alias("n_exact"))

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from pathlib import Path
 
 from discogs_xml_to_parquet_spark.registry import query
-from discogs_xml_to_parquet_spark.staging import work_dir as _work_dir
+from discogs_xml_to_parquet_spark.staging import stage_df, work_dir as _work_dir
 from discogs_xml_to_parquet_spark.streaming.events import (
     EVENTS_STREAM_SCHEMA,
     dedup_first,
@@ -477,7 +477,7 @@ def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch SQL.
 
     Scale shape: the dimension is built once batch-side (one shuffle
-    over the changelog, staged via localCheckpoint) and BROADCAST into
+    over the changelog, staged via stage_df) and BROADCAST into
     every micro-batch -- the stream side never shuffles for the join,
     which is the whole point of the pattern at 100 TB (a shuffled
     stream-static join would re-partition every micro-batch). The
@@ -503,7 +503,7 @@ def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "cohort"
             )
         )
-        .localCheckpoint()
+        .transform(stage_df)
     )
     schema = EVENTS_STREAM_SCHEMA
     stream = (

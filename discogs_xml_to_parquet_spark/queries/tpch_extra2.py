@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from discogs_xml_to_parquet_spark.functions.exact import dsum, scaled, unscale
 from discogs_xml_to_parquet_spark.registry import query
+from discogs_xml_to_parquet_spark.staging import stage_df
 from discogs_xml_to_parquet_spark.tables import load
 
 
@@ -300,7 +301,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev = (
         li.groupBy("l_suppkey")
         .agg(F.sum(scaled(net).cast("decimal(38,0)")).alias("r"))
-        .localCheckpoint()  # one aggregate serves MAX and the join-back
+        .transform(stage_df)  # one aggregate serves MAX and the join-back
     )
     mx = rev.agg(F.max("r").alias("mx"))
     s = F.broadcast(load(spark, sf_dir, "supplier"))

@@ -1,0 +1,44 @@
+"""Job attribution across driver threads: every Spark job a query
+launches runs in its caller's job group, including the jobs setsim
+overlaps on a second driver thread. A job outside the group can be
+neither attributed to the query nor cancelled with it
+(`cancelJobGroup`)."""
+
+from __future__ import annotations
+
+import time
+
+from discogs_xml_to_parquet_spark import registry
+from tests.conftest import SF_SMOKE
+
+GROUP = "setsim-attribution"
+
+
+def _settled_job_ids(tracker, group, timeout_s=30.0):
+    """Job ids of `group` (None = jobs outside any group) once the
+    async listener has stopped adding to them for one second."""
+    prev, stable_polls = None, 0
+    deadline = time.monotonic() + timeout_s
+    while stable_polls < 5 and time.monotonic() < deadline:
+        ids = set(tracker.getJobIdsForGroup(group))
+        stable_polls = stable_polls + 1 if ids == prev else 0
+        prev = ids
+        time.sleep(0.2)
+    return prev
+
+
+def test_setsim_overlapped_jobs_stay_in_callers_group(spark):
+    registry.load_all_queries()
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped_before = _settled_job_ids(tracker, None)
+    sc.setJobGroup(GROUP, "q_setsim_prefix_join")
+    try:
+        registry.QUERIES["q_setsim_prefix_join"](spark, SF_SMOKE).collect()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert _settled_job_ids(tracker, GROUP), "the query ran no job in its group"
+    stray = _settled_job_ids(tracker, None) - ungrouped_before
+    assert not stray, f"jobs {sorted(stray)} ran outside the caller's group"

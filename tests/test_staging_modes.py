@@ -1,20 +1,24 @@
-"""stage_df's two staging modes (VERDICT r12 item 5).
+"""stage_df's two staging modes (VERDICT r12 item 5), and the rule
+that it is the engine's only lineage cut.
 
-The staged lanes (setsim, graph_iter, matching, incremental) cut
-lineage through staging.stage_df. Default = localCheckpoint
-(executor-memory blocks; a lost executor kills the job). Production =
-SPARK_GRAFT_CHECKPOINT_DIR set, which swaps the SAME call sites to
-reliable checkpoint() files under the configured dir, so a
-1000-executor run survives node loss by replaying from the checkpoint
-store. These tests pin that the switch (a) actually engages (files
-appear under the dir), and (b) changes no values.
+Every lineage cut in the engine goes through staging.stage_df. Default
+= localCheckpoint (executor-memory blocks; a lost executor kills the
+job). Production = SPARK_GRAFT_CHECKPOINT_DIR set, which swaps the
+SAME call sites to reliable checkpoint() files under the configured
+dir, so a 1000-executor run survives node loss by replaying from the
+checkpoint store. These tests pin that the switch (a) actually engages
+(files appear under the dir) at a query from every module that stages,
+(b) changes no values, and (c) cannot be bypassed: no materialization
+call outside staging.py except the two documented exceptions.
 """
 
 from __future__ import annotations
 
+import ast
 import os
 import shutil
 import tempfile
+from collections import Counter
 from pathlib import Path
 
 import pytest
@@ -41,20 +45,49 @@ def _rows(spark, name):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_reliable_checkpoint_mode_same_values(spark, ckpt_dir):
-    """One staged lane end-to-end in BOTH modes: identical rows, and
+# one query per module that stages through stage_df: incremental's
+# stored MV, then each module migrated off raw localCheckpoint calls
+RELIABLE_MODE_QUERIES = [
+    "q_incremental_rollup",
+    "q_curation_pipeline",  # curation_full
+    "q_stats_mad",  # features + operators/prefix
+    "q_freq_items_cms",  # sketches
+    "q_triangle_count",  # analytics_extra
+    "q_dedup_semantic",  # curation_extra
+    "q_join_aqe_skew",  # runtime_filters.skew_lane
+    "q_distribution_drift",  # drift
+    "q15_top_supplier",  # tpch_extra2
+    "q_stream_static_enrich",  # streaming_queries
+]
+
+
+@pytest.mark.parametrize("name", RELIABLE_MODE_QUERIES)
+def test_reliable_checkpoint_mode_same_values(spark, ckpt_dir, monkeypatch,
+                                              name):
+    """A staged query end-to-end in BOTH modes: identical rows, and
     the reliable mode demonstrably wrote checkpoint files (otherwise
     the env switch could silently no-op and this test would pass
-    vacuously)."""
-    name = "q_incremental_rollup"
+    vacuously) without a single executor-local checkpoint (a raw
+    localCheckpoint beside the query's stage_df calls would bypass
+    the mode while the files still appear)."""
     default_rows = _rows(spark, name)
 
+    df_class = type(spark.range(1))
+    local_checkpoint = df_class.localCheckpoint
+    local_calls = []
+
+    def spy(self, *args, **kwargs):
+        local_calls.append(self)
+        return local_checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(df_class, "localCheckpoint", spy)
     os.environ["SPARK_GRAFT_CHECKPOINT_DIR"] = ckpt_dir
     reliable_rows = _rows(spark, name)
 
     assert reliable_rows == default_rows
     written = [p for p in Path(ckpt_dir).rglob("*") if p.is_file()]
     assert written, "reliable mode engaged but wrote no checkpoint files"
+    assert not local_calls, "a staging site bypassed reliable mode"
 
 
 def test_reliable_mode_covers_the_iterative_lane(spark, ckpt_dir):
@@ -95,3 +128,52 @@ def test_reliable_mode_covers_connected_components(spark, ckpt_dir):
     assert labels(connected_components_two_phase) == default_two
     written = [p for p in Path(ckpt_dir).rglob("*") if p.is_file()]
     assert written, "reliable mode engaged but wrote no checkpoint files"
+
+
+PACKAGE = Path(__file__).resolve().parent.parent / "discogs_xml_to_parquet_spark"
+MATERIALIZERS = ("localCheckpoint", "checkpoint", "persist", "cache")
+# the only materialization calls allowed outside stage_df, by file:
+# graph_iter persists the src-partitioned edge list and its out-degree
+# table (only InMemoryRelation keeps the hash partitioning the rank
+# rounds consume), and formats_extra caches because Spark refuses a
+# corrupt-record-column-only scan on an uncached frame
+ALLOWED_CALLS = Counter({
+    ("staging.py", "localCheckpoint"): 1,
+    ("staging.py", "checkpoint"): 1,
+    ("queries/graph_iter.py", "persist"): 2,
+    ("queries/formats_extra.py", "cache"): 1,
+})
+
+
+def _engine_modules():
+    for path in sorted(PACKAGE.rglob("*.py")):
+        yield path.relative_to(PACKAGE).as_posix(), ast.parse(path.read_text())
+
+
+def test_stage_df_is_the_only_lineage_cut():
+    """Structural: every localCheckpoint / checkpoint / persist /
+    cache CALL in the engine (comments and docstrings don't count) is
+    stage_df's own or one of the documented exceptions, so reliable
+    mode cannot be bypassed by a raw call at a new site."""
+    calls = Counter(
+        (rel, node.func.attr)
+        for rel, tree in _engine_modules()
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in MATERIALIZERS
+    )
+    assert calls == ALLOWED_CALLS
+
+
+def test_checkpoint_dir_env_read_only_in_staging():
+    """The local-vs-reliable policy lives in stage_df alone: no other
+    engine module names the env var in code (a docstring may)."""
+    readers = {
+        rel
+        for rel, tree in _engine_modules()
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Constant)
+        and node.value == "SPARK_GRAFT_CHECKPOINT_DIR"
+    }
+    assert readers == {"staging.py"}
