@@ -1,12 +1,17 @@
-"""Connected components by min-label propagation: the clustering step
-that turns near-duplicate *pairs* into dedup *groups* (keep one doc per
-component).
+"""Connected components: the clustering step that turns near-duplicate
+*pairs* into dedup *groups* (keep one doc per component). Every variant
+returns (id, comp), comp = min node id of the component
+(equivalence-tested):
 
-Iterative DataFrame algorithm (the GraphX/GraphFrames-free version):
-each node's label starts as its own id; every round, each node takes
-the min of its label and its neighbors' labels; converges in
-O(component diameter) rounds. Per round: one shuffle (the groupBy on
-the edge src).
+- connected_components: min-label propagation in DataFrame rounds
+  (GraphX/GraphFrames-free); O(component diameter) rounds, one shuffle
+  each (the groupBy on the edge src).
+- connected_components_two_phase: large-star/small-star, O(log^2
+  diameter) rounds, for big or deep graphs.
+- connected_components_auto: labels a graph of up to small_graph_edges
+  on the driver, bigger ones with two-phase. Dedup graphs are tiny
+  (~10 edges in the curation capstone at sf0.01), where each
+  distributed round is ~7 jobs of pure overhead.
 
 Scale rules encoded here:
 - stage each round (staging.stage_df): an iterative loop otherwise
@@ -17,21 +22,13 @@ Scale rules encoded here:
   a lost node from the checkpoint store instead of failing the
   fixpoint (same production mode as the other staged lanes).
 - convergence is checked with a count of changed labels (an action per
-  round -- inherent to any fixpoint loop).
-- for web-scale or deep graphs use connected_components_two_phase
-  (large-star/small-star, implemented below): O(log^2 diameter)
-  rounds vs O(diameter); the min-label round is the simpler tool for
-  dedup graphs, whose components are small and shallow, and each
-  labels components identically (equivalence-tested).
-- connected_components_auto dispatches between them on the observed
-  edge count (min-label under the threshold, two-phase above), so
-  pipelines pay the two-phase round machinery only when the graph is
-  big enough for it to win (r4 verdict: scale-insurance was being
-  paid at the wrong scale).
+  round -- inherent to any distributed fixpoint loop).
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -52,14 +49,6 @@ def connected_components(edges: DataFrame, src: str = "src",
         F.col(src).alias("a"), F.col(dst).alias("b")
     ).union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
     sym = stage_df(sym.distinct())
-    return _min_label_from_sym(sym, max_iter)
-
-
-def _min_label_from_sym(sym: DataFrame, max_iter: int) -> DataFrame:
-    """Min-label rounds over a prebuilt, checkpointed symmetric
-    distinct edge set (columns a, b) -- shared by connected_components
-    and the size dispatcher so the dispatcher's count job and the
-    algorithm reuse one materialization."""
     # Seed labels with round 1's output directly: starting from
     # label(u) = u, the first round always computes min(u, min
     # neighbor), so folding it into the init saves one full
@@ -267,37 +256,47 @@ def connected_components_auto(edges: DataFrame, src: str = "src",
                               dst: str = "dst", max_iter: int = 25,
                               small_graph_edges: int = 2_000_000
                               ) -> DataFrame:
-    """Size-dispatched connected components (r4 verdict item 2): count
-    the edge list once, then run min-label propagation when it is small
-    (job-scheduling overhead dominates tiny graphs, and dedup graphs
-    are small and shallow -- at sf0.1 the curation capstone's graph is
-    ~100 edges) and large-star/small-star above the threshold (the
-    O(log^2 d) web-scale path). The count is cheap because the edge
-    list is checkpointed first -- which the iterative algorithms need
-    anyway, and which also stops the caller's possibly-expensive
-    upstream (the capstone feeds the whole banded-LSH chain in here)
-    from evaluating once per round.
-
-    If min-label fails to converge within max_iter (a deep chain inside
-    a small edge list), falls back to two-phase rather than surfacing
-    the small-graph heuristic as an error. Both paths label components
-    identically (equivalence-tested), so the dispatch is invisible to
-    results."""
-    # ONE symmetric-distinct checkpoint serves the dispatch count AND
-    # min-label's round loop (it is exactly the prep min-label needs);
-    # two-phase re-canonicalizes from it, which is cheap because the
-    # input is already materialized. Self-loops survive distinct() as
-    # (u, u) rows, so both downstream preps see the same node set.
+    """Size-dispatched connected components (r4 verdict item 2): stage
+    the symmetric distinct edges once (so the caller's upstream, the
+    capstone's whole banded-LSH chain, evaluates once), collect at most
+    2*small_graph_edges + 1 of them (<= 64 MB), and label a graph within
+    the bound on the driver -- no per-round jobs and no depth limit, so
+    a deep chain needs no fallback; MLlib's k-means|| clusters its
+    small candidate set on the driver the same way. A bigger graph goes
+    to two-phase over the staged edges; small_graph_edges=0 forces it.
+    Self-loops survive distinct() as (u, u) rows, so both paths see the
+    same node set."""
     sym = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
         .distinct()
     )
     sym = stage_df(sym)
-    if sym.count() <= 2 * small_graph_edges:
-        try:
-            return _min_label_from_sym(sym, max_iter)
-        except RuntimeError:
-            pass  # deep component: retry with the O(log^2 d) algorithm
-    return connected_components_two_phase(sym, src="a", dst="b",
-                                          max_iter=max_iter)
+    head = sym.limit(2 * small_graph_edges + 1).toArrow()
+    if head.num_rows > 2 * small_graph_edges:
+        return connected_components_two_phase(sym, src="a", dst="b",
+                                              max_iter=max_iter)
+    ids, comp = _label_on_driver(
+        head.column("a").to_numpy(), head.column("b").to_numpy()
+    )
+    return sym.sparkSession.createDataFrame(
+        pa.table({"id": ids, "comp": comp}), "id bigint, comp bigint"
+    )
+
+
+def _label_on_driver(a: np.ndarray, b: np.ndarray
+                     ) -> tuple[np.ndarray, np.ndarray]:
+    """(node ids, component min id) for symmetric edges a[i] -- b[i].
+    Ids are renumbered by rank, so the smallest index is the min id.
+    Each round hooks every root onto its neighbors' smallest root, then
+    jumps pointers until all nodes point at roots; a component with
+    two or more roots loses at least one per round."""
+    ids, idx = np.unique(np.concatenate([a, b]), return_inverse=True)
+    ia, ib = idx[: len(a)], idx[len(a):]
+    lab = np.arange(len(ids))
+    while True:
+        np.minimum.at(lab, lab[ia], lab[ib])
+        while not np.array_equal(nxt := lab[lab], lab):
+            lab = nxt
+        if np.array_equal(lab[ia], lab[ib]):
+            return ids, ids[lab]

@@ -106,7 +106,9 @@ def stage_df(df, eager=True):
     replays from the checkpoint store. The env is read per call, so
     one pytest process can exercise both modes back-to-back.
 
-    `eager=False` (connected_components' round loop): the lineage cut
+    `eager=False` (the round loop of connected_components, the
+    distributed min-label labeling; connected_components_auto labels
+    small graphs on the driver and runs no rounds): the lineage cut
     is immediate -- the returned frame's plan is a LogicalRDD -- but
     the blocks are written by the first action on the result, so the
     round's materialization rides its convergence count. Measured on a

@@ -415,11 +415,14 @@ def test_two_phase_cc_matches_min_label(spark):
     """large-star/small-star must produce the same component labeling
     as min-label propagation on path, star, clique, and random graphs
     (incl. the deep-path case where min-label needs diameter rounds but
-    two-phase needs O(log^2 d))."""
+    two-phase needs O(log^2 d)), and so must both paths of the size
+    dispatcher. A path deeper than max_iter is past min-label's reach,
+    so two-phase is the reference there."""
     import random
 
     from discogs_xml_to_parquet_spark.operators.graph import (
         connected_components,
+        connected_components_auto,
         connected_components_two_phase,
     )
 
@@ -436,26 +439,34 @@ def test_two_phase_cc_matches_min_label(spark):
         # parent-and-member convergence check alone would wrongly call
         # a fixpoint (node 3 has two parents; 1 and 2 must merge)
         "shared_member": [(1, 3), (2, 3)],
+        # deeper than max_iter=25: min-label raises, the dispatcher's
+        # driver pass has no depth limit
+        "deep_path": [(i, i + 1) for i in range(60)],
+        "dup_and_reversed": [(1, 2), (2, 1), (1, 2), (7, 3), (3, 7), (3, 4)],
+        "empty": [],
     }
-    from discogs_xml_to_parquet_spark.operators.graph import (
-        connected_components_auto,
-    )
 
     for name, pairs in cases.items():
         pairs = [(a, b) for a, b in pairs if a != b]
         edges = spark.createDataFrame(pairs, "src long, dst long")
-        base = {
-            (r.id, r.comp) for r in connected_components(edges).collect()
-        }
         two = {
             (r.id, r.comp)
             for r in connected_components_two_phase(edges).collect()
         }
+        if name == "deep_path":
+            with pytest.raises(RuntimeError, match="did not converge"):
+                connected_components(edges)
+            base = two
+            assert base == {(i, 0) for i in range(61)}
+        else:
+            base = {
+                (r.id, r.comp) for r in connected_components(edges).collect()
+            }
         assert two == base, f"{name}: {sorted(two)} != {sorted(base)}"
-        assert len(two) > 0
+        assert len(two) > 0 or not pairs
         # the size dispatcher must be invisible to results on BOTH of
-        # its paths: min-label (every fixture is under the default
-        # threshold) and the forced two-phase path (threshold 0)
+        # its paths: the driver pass (every fixture is under the
+        # default threshold) and the forced two-phase path (threshold 0)
         auto_small = {
             (r.id, r.comp)
             for r in connected_components_auto(edges).collect()
@@ -466,15 +477,17 @@ def test_two_phase_cc_matches_min_label(spark):
                 edges, small_graph_edges=0
             ).collect()
         }
-        assert auto_small == base, f"{name} (auto/min-label path)"
+        assert auto_small == base, f"{name} (auto/driver path)"
         assert auto_large == base, f"{name} (auto/two-phase path)"
 
 
 def test_two_phase_cc_keeps_self_loop_nodes(spark):
     """A node whose only edge is a self-loop must still appear (as its
-    own component) -- both CC variants, same output."""
+    own component) -- every CC variant and both dispatcher paths, same
+    output."""
     from discogs_xml_to_parquet_spark.operators.graph import (
         connected_components,
+        connected_components_auto,
         connected_components_two_phase,
     )
 
@@ -486,4 +499,14 @@ def test_two_phase_cc_keeps_self_loop_nodes(spark):
         (r.id, r.comp)
         for r in connected_components_two_phase(edges).collect()
     }
+    auto_small = {
+        (r.id, r.comp) for r in connected_components_auto(edges).collect()
+    }
+    auto_large = {
+        (r.id, r.comp)
+        for r in connected_components_auto(
+            edges, small_graph_edges=0
+        ).collect()
+    }
     assert two == base == {(5, 5), (1, 1), (2, 1)}
+    assert auto_small == auto_large == base

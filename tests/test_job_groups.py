@@ -2,7 +2,8 @@
 launches runs in its caller's job group, including the jobs setsim
 overlaps on a second driver thread. A job outside the group can be
 neither attributed to the query nor cancelled with it
-(`cancelJobGroup`)."""
+(`cancelJobGroup`). Job groups also pin the headline queries' job
+counts, which dominate their latency at small scale."""
 
 from __future__ import annotations
 
@@ -12,6 +13,15 @@ from discogs_xml_to_parquet_spark import registry
 from tests.conftest import SF_SMOKE
 
 GROUP = "setsim-attribution"
+
+# Jobs per run of each headline query at sf0.001 on the test session, in
+# a session that has loaded its tables before (schemas reused).
+HEADLINE_JOBS = {
+    "q_curation_pipeline": 18,
+    "q_asof_join": 5,
+    "q_sessionize_events": 4,
+    "q_stream_tumbling": 4,
+}
 
 
 def _settled_job_ids(tracker, group, timeout_s=30.0):
@@ -27,6 +37,12 @@ def _settled_job_ids(tracker, group, timeout_s=30.0):
     return prev
 
 
+def _clear_job_group(sc):
+    for key in ("spark.jobGroup.id", "spark.job.description",
+                "spark.job.interruptOnCancel"):
+        sc.setLocalProperty(key, None)
+
+
 def test_setsim_overlapped_jobs_stay_in_callers_group(spark):
     registry.load_all_queries()
     sc = spark.sparkContext
@@ -36,9 +52,27 @@ def test_setsim_overlapped_jobs_stay_in_callers_group(spark):
     try:
         registry.QUERIES["q_setsim_prefix_join"](spark, SF_SMOKE).collect()
     finally:
-        for key in ("spark.jobGroup.id", "spark.job.description",
-                    "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(key, None)
+        _clear_job_group(sc)
     assert _settled_job_ids(tracker, GROUP), "the query ran no job in its group"
     stray = _settled_job_ids(tracker, None) - ungrouped_before
     assert not stray, f"jobs {sorted(stray)} ran outside the caller's group"
+
+
+def test_headline_job_counts_stay_pinned(spark):
+    registry.load_all_queries()
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    counts = {}
+    for name in HEADLINE_JOBS:
+        run = registry.QUERIES[name]
+        # an uncounted first run, so table schemas are already known
+        run(spark, SF_SMOKE).write.format("noop").mode("overwrite").save()
+        group = f"headline-jobs-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            run(spark, SF_SMOKE).write.format("noop").mode("overwrite").save()
+        finally:
+            _clear_job_group(sc)
+        counts[name] = len(_settled_job_ids(tracker, group))
+    over = {n: c for n, c in counts.items() if c > HEADLINE_JOBS[n]}
+    assert not over, f"jobs per query {counts} exceed {HEADLINE_JOBS}"
