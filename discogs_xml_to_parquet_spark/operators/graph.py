@@ -1,28 +1,26 @@
 """Connected components: the clustering step that turns near-duplicate
-*pairs* into dedup *groups* (keep one doc per component). Every variant
-returns (id, comp), comp = min node id of the component
+*pairs* into dedup *groups* (keep one doc per component). Both paths
+return (id, comp), comp = min node id of the component
 (equivalence-tested):
 
-- connected_components: min-label propagation in DataFrame rounds
-  (GraphX/GraphFrames-free); O(component diameter) rounds, one shuffle
-  each (the groupBy on the edge src).
+- connected_components: the entry point. Labels a graph of up to
+  SMALL_GRAPH_EDGES undirected edges on the driver and sends bigger
+  ones to two-phase. Dedup graphs are tiny (~10 edges in the curation
+  capstone at sf0.01), where each distributed round is ~7 jobs of
+  pure overhead.
 - connected_components_two_phase: large-star/small-star, O(log^2
   diameter) rounds, for big or deep graphs.
-- connected_components_auto: labels a graph of up to small_graph_edges
-  on the driver, bigger ones with two-phase. Dedup graphs are tiny
-  (~10 edges in the curation capstone at sf0.01), where each
-  distributed round is ~7 jobs of pure overhead.
 
 Scale rules encoded here:
-- stage each round (staging.stage_df): an iterative loop otherwise
-  builds an unbounded lineage -- plan size grows linearly, and the
-  optimizer re-analyzes the whole history every round. Default is
-  localCheckpoint (zero I/O); SPARK_GRAFT_CHECKPOINT_DIR switches
-  every round to RELIABLE checkpoints so a 1000-executor run replays
-  a lost node from the checkpoint store instead of failing the
-  fixpoint (same production mode as the other staged lanes).
-- convergence is checked with a count of changed labels (an action per
-  round -- inherent to any distributed fixpoint loop).
+- stage each two-phase round (staging.stage_df): an iterative loop
+  otherwise builds an unbounded lineage -- plan size grows linearly,
+  and the optimizer re-analyzes the whole history every round.
+  Default is localCheckpoint (zero I/O); SPARK_GRAFT_CHECKPOINT_DIR
+  switches every round to RELIABLE checkpoints so a 1000-executor run
+  replays a lost node from the checkpoint store instead of failing
+  the fixpoint (same production mode as the other staged lanes).
+- convergence is checked with a one-row probe per round (an action
+  per round -- inherent to any distributed fixpoint loop).
 """
 
 from __future__ import annotations
@@ -35,93 +33,15 @@ from pyspark.sql import functions as F
 from discogs_xml_to_parquet_spark.staging import stage_df
 
 
-def connected_components(edges: DataFrame, src: str = "src",
-                         dst: str = "dst", max_iter: int = 25) -> DataFrame:
-    """(src, dst) edge list -> (id, component) with component = min
-    node id in the component. Nodes = every endpoint; callers union in
-    isolated nodes afterwards if needed.
-
-    Raises RuntimeError if the fixpoint has not converged after
-    max_iter rounds (component diameter > max_iter) -- silently
-    returning split components would corrupt downstream dedup groups
-    without any signal (ADVICE r1)."""
-    sym = edges.select(
-        F.col(src).alias("a"), F.col(dst).alias("b")
-    ).union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-    sym = stage_df(sym.distinct())
-    # Seed labels with round 1's output directly: starting from
-    # label(u) = u, the first round always computes min(u, min
-    # neighbor), so folding it into the init saves one full
-    # join+agg+checkpoint round (dedup graphs converge in 2-3 rounds,
-    # so this is a ~30% round-count cut). The same aggregate yields
-    # the node set, replacing the separate distinct. NOT checkpointed:
-    # the seed is one groupBy over the already-checkpointed edge set,
-    # and round 1 reads it twice (join probe + label carry) through a
-    # REUSED exchange -- skipping the eager materialization saves one
-    # scheduled job per call, which on job-overhead-dominated tiny
-    # graphs is a measurable slice of the whole fixpoint.
-    labels = (
-        sym.groupBy("a")
-        .agg(F.min("b").alias("nmin"))
-        .select(
-            F.col("a").alias("id"),
-            F.least(F.col("a"), F.col("nmin")).alias("comp"),
-        )
-    )
-
-    # Each round stages LAZILY (stage_df(eager=False), whose docstring
-    # carries the measured job count): the lineage cut is immediate --
-    # without it labels appears twice per round and the logical tree
-    # DOUBLES each round (the eager-probe experiment OOM'd the driver
-    # generating a 2^k-node tree on a deep chain) -- while the local
-    # checkpoint blocks are written by the changed-count action below
-    # instead of by a separate eager materialization job.
-    changed = -1  # max_iter <= 0 must hit the non-convergence raise
-    for _ in range(max_iter):
-        neigh_min = (
-            sym.join(labels, sym["b"] == labels["id"])
-            .groupBy("a")
-            .agg(F.min("comp").alias("ncomp"))
-        )
-        # carry the previous label through the materialization so the
-        # convergence probe is a scan of materialized data, not
-        # another join+shuffle job per round
-        new_labels = (
-            labels.join(neigh_min, labels["id"] == neigh_min["a"], "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("comp"), F.coalesce("ncomp", F.col("comp"))
-                ).alias("comp"),
-                F.col("comp").alias("old_comp"),
-            )
-        )
-        new_labels = stage_df(new_labels, eager=False)
-        changed = new_labels.filter(
-            F.col("comp") != F.col("old_comp")
-        ).count()  # also writes the round's checkpoint blocks
-        labels = new_labels.select("id", "comp")
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"({changed} labels still changing); raise max_iter or use "
-            "connected_components_two_phase for deep components"
-        )
-    return labels
-
-
 def connected_components_two_phase(edges: DataFrame, src: str = "src",
                                    dst: str = "dst",
                                    max_iter: int = 25) -> DataFrame:
     """Large-star/small-star connected components (Kiveris et al.,
     'Connected Components in MapReduce and Beyond') -- the web-scale
-    upgrade over min-label propagation: rounds needed are
-    O(log^2 diameter) rather than O(diameter), so deep/chained
-    components (exactly what near-dup graphs degenerate into when a
-    template document links long chains) converge in a handful of
-    rounds.
+    path: rounds needed are O(log^2 diameter) rather than min-label
+    propagation's O(diameter), so deep/chained components (exactly what
+    near-dup graphs degenerate into when a template document links long
+    chains) converge in a handful of rounds.
 
     Each round rewrites the edge set:
     - large-star: for every node u, connect each strictly-larger
@@ -138,7 +58,7 @@ def connected_components_two_phase(edges: DataFrame, src: str = "src",
     which AQE's skew-join splitting handles.
 
     Returns (id, comp) = min node id of each component, identical to
-    connected_components (equivalence is regression-tested)."""
+    the driver labeling (equivalence is regression-tested)."""
     # materialize the input ONCE: nodes and e both derive from raw, and
     # the caller's edge list may carry an arbitrarily expensive lineage
     # (the curation capstone feeds the whole banded-LSH chain in here)
@@ -148,7 +68,7 @@ def connected_components_two_phase(edges: DataFrame, src: str = "src",
     ))
     # node set from RAW edges, before the self-loop filter: a node whose
     # only edge is a self-loop must still appear in the output (as its
-    # own component), matching connected_components
+    # own component), matching the driver labeling
     nodes = raw.select(F.col("a").alias("id")).union(
         raw.select(F.col("b").alias("id"))
     ).distinct()
@@ -252,30 +172,35 @@ def connected_components_two_phase(edges: DataFrame, src: str = "src",
     )
 
 
-def connected_components_auto(edges: DataFrame, src: str = "src",
-                              dst: str = "dst", max_iter: int = 25,
-                              small_graph_edges: int = 2_000_000
-                              ) -> DataFrame:
-    """Size-dispatched connected components (r4 verdict item 2): stage
-    the symmetric distinct edges once (so the caller's upstream, the
-    capstone's whole banded-LSH chain, evaluates once), collect at most
-    2*small_graph_edges + 1 of them (<= 64 MB), and label a graph within
-    the bound on the driver -- no per-round jobs and no depth limit, so
-    a deep chain needs no fallback; MLlib's k-means|| clusters its
-    small candidate set on the driver the same way. A bigger graph goes
-    to two-phase over the staged edges; small_graph_edges=0 forces it.
-    Self-loops survive distinct() as (u, u) rows, so both paths see the
-    same node set."""
+# Graphs of up to this many undirected edges are labeled on the driver:
+# the bounded collect is at most 2 * SMALL_GRAPH_EDGES + 1 symmetric
+# rows of two longs (<= 64 MB).
+SMALL_GRAPH_EDGES = 2_000_000
+
+
+def connected_components(edges: DataFrame, src: str = "src",
+                         dst: str = "dst") -> DataFrame:
+    """(src, dst) edge list -> (id, comp), comp = min node id of the
+    component. Nodes = every endpoint; callers union in isolated nodes
+    afterwards if needed.
+
+    Stages the symmetric distinct edges once (so the caller's
+    upstream, the capstone's whole banded-LSH chain, evaluates once),
+    collects at most 2*SMALL_GRAPH_EDGES + 1 of them, and labels a
+    graph within the bound on the driver -- no per-round jobs and no
+    depth limit; MLlib's k-means|| clusters its small candidate set on
+    the driver the same way. A bigger graph goes to two-phase over the
+    staged edges. Self-loops survive distinct() as (u, u) rows, so
+    both paths see the same node set."""
     sym = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
         .distinct()
     )
     sym = stage_df(sym)
-    head = sym.limit(2 * small_graph_edges + 1).toArrow()
-    if head.num_rows > 2 * small_graph_edges:
-        return connected_components_two_phase(sym, src="a", dst="b",
-                                              max_iter=max_iter)
+    head = sym.limit(2 * SMALL_GRAPH_EDGES + 1).toArrow()
+    if head.num_rows > 2 * SMALL_GRAPH_EDGES:
+        return connected_components_two_phase(sym, src="a", dst="b")
     ids, comp = _label_on_driver(
         head.column("a").to_numpy(), head.column("b").to_numpy()
     )

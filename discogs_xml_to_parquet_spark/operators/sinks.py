@@ -1,5 +1,6 @@
 """Parquet sink layouts beyond the reference's single file
-(main.rs:219-226): partitioned, size-targeted, and single-file writes.
+(main.rs:219-226): partitioned and size-targeted writes. The
+single-file layout itself is `convert(single_file=True)`.
 
 Layout decisions are the write-side half of every scan optimization:
 - partitionBy on a low-cardinality pruning key (date, lang, bucket)
@@ -28,10 +29,3 @@ def write_partitioned(df: DataFrame, path: str, partition_cols: list[str],
         .partitionBy(*partition_cols)
         .parquet(path, compression="snappy")
     )
-
-
-def write_single_file(df: DataFrame, path: str) -> None:
-    """Byte-layout parity with the reference's one output file
-    (main.rs:223): only for small results -- a single writer task is
-    the anti-pattern at scale."""
-    df.coalesce(1).write.mode("overwrite").parquet(path, compression="snappy")

@@ -1,106 +1,78 @@
 """Query modules; importing this package registers every named query.
 
 Import order IS driver-check order (the registry dict preserves
-insertion order and the driver checks the first 50 registered queries
--- r01-r13 all cut at exactly 50). Rotation policy: queries with no
-CORRECTNESS row anywhere go first, then fixed/changed queries, then
-pinned modules, then the module whose passing evidence is oldest.
+insertion order and the driver checks the first 50 registered queries).
+Rotation policy: queries with no CORRECTNESS row anywhere go first,
+then fixed/changed queries, then pinned modules, then the module whose
+passing evidence is oldest.
 
 The policy is CODE, not prose: registry.window() derives this order
 from the CORRECTNESS_r*.json artifacts (VERDICT r6 item 6), and
 tests/test_window.py pins that the first 50 imports below agree with
 it. The derivation is PINNED to the artifacts that existed when it was
 made (window(max_round=DERIVED_AT_ROUND) -- VERDICT r8 item 1): the
-driver landing CORRECTNESS_r14.json cannot flip the fixed-point test
-red; re-deriving for r15 is a deliberate commit that bumps
-DERIVED_AT_ROUND to 14 and pastes the order
-`python scripts/window_plan.py --max-round 14 --changed ...` prints.
+driver landing the next CORRECTNESS_r*.json cannot flip the
+fixed-point test red; re-deriving is a deliberate commit that bumps
+DERIVED_AT_ROUND and pastes the order
+`python scripts/window_plan.py --max-round <round> --changed ...` prints.
 
-Round-14 window (the first 50), derived by window(changed=R14_CHANGED
-in tests/test_window.py, pin=(), max_round=13). The design intent
-(VERDICT r13 item 1): re-green the stage_df-migrated connected-
-components consumers and start retiring the 37-query r9-evidence
-cohort -- the oldest evidence in the repo.
+Round-16 window (the first 50), derived by window(changed=CHANGED in
+tests/test_window.py, pin=(), max_round=15). The design intent:
+re-green every query whose code changed since its last green row --
+the three connected-components consumers moved onto the size-
+dispatched operators/graph.py entry point, and the tables.load_spread
+users now spread to defaultParallelism -- then spend the rest on the
+r9-evidence cohort, the oldest evidence in the repo.
 
-- 1-2: snapshot_read NEW r14 at rank 0 -- q_snapshot_read, the FULL
-  composed snapshot read (versioned manifest -> three-gate planned
-  scan -> positional-DV subtraction); its lakehouse import folds in
-  first, and q_lakehouse_read_path is itself CHANGED in-round
-  (planned_read now exposes the planned file list);
-- 3-4: packing rank 0 (q_pack_greedy NEW r14 -- boundary-preserving
-  next-fit packing as a per-shard applyInPandas recurrence, the
-  non-splitting twin of concat-and-chunk);
-- 5-10: matching CHANGED (the late-r13 operators/graph.py stage_df
-  migration touches q_entity_resolution's CC stage; the module's
-  five siblings -- including the late-r13 sampled-blocking twin --
-  ride the fold with fresh r13 evidence);
-- 9-19: dedup CHANGED (q_dedup_minhash_lsh + q_dedup_simhash_banded
-  are stage_df-migrated CC consumers; the module's r11-evidence tail
-  re-verifies with them);
-- 20-23: packing + quality + curation_full ride the dependency fold
+- 1-6: matching CHANGED (q_entity_resolution's CC stage);
+- 7-17: dedup CHANGED (q_dedup_components + q_curation_keep_best's
+  CC stage; q_dedup_minhash_lsh + q_dedup_simhash_banded spread);
+- 18-22: packing + quality + curation_full ride the dependency fold
   (curation_full imports dedup/packing/quality; q_curation_pipeline
-  is itself a stage_df-migrated CC consumer);
-- 24-28: clustering + curation_extra (q_dedup_semantic is the fifth
-  stage_df-migrated CC consumer; clustering is its import dep);
-- 29-31: setsim + graph_iter CHANGED in-round (the interned-token
-  verification rewrite and the pre-divided PageRank rank vector --
-  both r13-green, both rewritten this round, so both re-verify);
-- 32-34: runtime_filters -- q_join_bucketed and q_join_bloom_dpp are
-  the two r9-evidence queries the late-r13 arrivals displaced past
-  the r13 cut (VERDICT r13: "they lead the r14 derivation");
-  q_join_aqe_skew rides its module;
-- 36-50: the r9-evidence cohort on evidence age -- binary_source,
-  tpch_extra3 (q4/q8/q12), layout, text_analysis (all seven),
-  windows (the cut lands INSIDE windows: rank_dense waits for r15).
+  spreads and is the CC dispatcher's original consumer);
+- 23-27: clustering + curation_extra (q_dedup_chunks spreads;
+  clustering is curation_extra's import dep);
+- 28-34: text_analysis (q_text_fingerprint spreads);
+- 35-42: the r10-evidence spread users with their module siblings --
+  quality_model, multimodal_audio, decontam, scoring;
+- 43-50: the r9-evidence cohort on evidence age -- windows,
+  subqueries, and the cut lands INSIDE semistructured (q_json_struct
+  waits for the next round).
 
-After this window the r9-evidence set shrinks from 37 to 18
-(subqueries, semistructured, relational, scalars, similarity --
-first in line for r15). The
+After this window the r9-evidence set shrinks to 15 (q_json_struct,
+relational, scalars, similarity -- first in line next round). The
 staging helpers the staged lanes share live in ../staging.py, OUTSIDE
 this package, so importing them cannot drag a query module forward in
 the window.
 """
 
 from discogs_xml_to_parquet_spark.queries import (  # noqa: F401
-    # 1-2: snapshot_read NEW r14 (rank 0) -- the FULL composed
-    # snapshot read (versioned manifest -> three-gate planned scan ->
-    # positional-DV subtraction); its lakehouse import folds in first
-    lakehouse,
-    snapshot_read,
-    # 3-4: packing rank 0 (q_pack_greedy NEW r14 -- the boundary-
-    # preserving next-fit packer; q_pack_sequences rides the module)
-    packing,
-    # 5-10: matching CHANGED (stage_df CC migration touches
-    # q_entity_resolution; fresh-r13 siblings ride the module fold)
+    # 1-6: matching CHANGED (q_entity_resolution's CC stage)
     matching,
-    # 11-21: dedup CHANGED (q_dedup_minhash_lsh + q_dedup_simhash_banded
-    # are stage_df-migrated; the r11 tail re-verifies)
+    # 7-17: dedup CHANGED (two CC consumers, two load_spread users)
     dedup,
-    # 22-24: the curation_full dependency fold (imports dedup,
-    # packing, quality; q_curation_pipeline is stage_df-migrated)
+    # 18-22: the curation_full dependency fold (imports dedup,
+    # packing, quality; q_curation_pipeline is CHANGED)
+    packing,
     quality,
     curation_full,
-    # 24-28: q_dedup_semantic CHANGED (stage_df) + its clustering dep
+    # 23-27: q_dedup_chunks CHANGED + its clustering dep
     clustering,
     curation_extra,
-    # 29-31: the in-round rewrites re-verify (interned setsim
-    # verification, pre-divided PageRank)
-    setsim,
-    graph_iter,
-    # 32-34: q_join_bucketed + q_join_bloom_dpp -- the two r9-evidence
-    # queries displaced past the r13 cut lead the rotation
-    runtime_filters,
-    # 35-50: the r9-evidence cohort on evidence age; the 50-cut lands
-    # exactly at windows' fourth query
-    binary_source,
-    tpch_extra3,
-    layout,
+    # 28-34: q_text_fingerprint CHANGED
     text_analysis,
+    # 35-42: r10-evidence load_spread users CHANGED
+    quality_model,
+    multimodal_audio,
+    decontam,
+    scoring,
+    # 43-50: the r9-evidence cohort on evidence age; the 50-cut lands
+    # at semistructured's first query
     windows,
-    # --- 50-query window cut ---
-    # r9-green remainder: first in line for round 15
     subqueries,
     semistructured,
+    # --- 50-query window cut ---
+    # r9-green remainder: first in line next round
     relational,
     scalars,
     similarity,
@@ -126,11 +98,7 @@ from discogs_xml_to_parquet_spark.queries import (  # noqa: F401,E402
     windows_extra,
     scd,
     cdc,
-    quality_model,
     vocab,
-    multimodal_audio,
-    decontam,
-    scoring,
     formats_extra,
     sampling,
     # r11-green
@@ -162,8 +130,7 @@ from discogs_xml_to_parquet_spark.queries import (  # noqa: F401,E402
     joins,
     nested,
     python_udfs,
-    # r13-green (freshest evidence, rotated out of the window;
-    # lakehouse/setsim/graph_iter already registered in-window above)
+    # r13-green
     tokenize,
     file_skipping,
     incremental,
@@ -176,4 +143,13 @@ from discogs_xml_to_parquet_spark.queries import (  # noqa: F401,E402
     cohorts,
     setops,
     temporal,
+    # r15-green (freshest evidence, rotated out of the window)
+    lakehouse,
+    snapshot_read,
+    setsim,
+    graph_iter,
+    runtime_filters,
+    binary_source,
+    tpch_extra3,
+    layout,
 )

@@ -186,11 +186,10 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # CC over the near-dup pairs only (exact-dup leaves provably
     # change nothing -- see the note above). CC is size-dispatched
-    # (operators/graph.py): min-label for the small shallow graphs
-    # dedup actually produces, two-phase large-star/small-star
-    # (O(log^2 d) rounds) once the edge list is big enough that round
-    # count, not per-round job overhead, dominates.
-    comp = G.connected_components_auto(
+    # (operators/graph.py): the small graphs dedup actually produces
+    # are labeled on the driver in one bounded collect, bigger ones by
+    # two-phase large-star/small-star (O(log^2 d) rounds).
+    comp = G.connected_components(
         near.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
     )
     stats = collapsed.select("doc_id", "n_tokens", "quality_score")

@@ -204,9 +204,10 @@ ORDER BY d.doc_id
 """,
 )
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup pairs -> dedup groups: connected components by iterative
-    min-label propagation (operators/graph.py), every document labeled
-    with its component's minimum doc_id (singletons label themselves).
+    """Near-dup pairs -> dedup groups: connected components
+    (operators/graph.py, labeled on the driver up to its size bound,
+    large-star/small-star above it), every document labeled with its
+    component's minimum doc_id (singletons label themselves).
     This is the step that turns pairwise similarity into 'keep one per
     group'. Oracle: DuckDB recursive-CTE transitive closure."""
     pairs = minhash_near_dup_pairs(spark, sf_dir)
@@ -661,8 +662,8 @@ def q_curation_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep the highest-quality member of each group (tie-break min
     doc_id). Output: one row per surviving document with its group
     size. Every stage is the scale-path variant (banded LSH candidates,
-    iterative CC, per-row quality arithmetic); the oracle rebuilds the
-    whole chain -- signatures, transitive closure, quality argmax --
+    size-dispatched CC, per-row quality arithmetic); the oracle rebuilds
+    the whole chain -- signatures, transitive closure, quality argmax --
     relationally in DuckDB."""
     from discogs_xml_to_parquet_spark.operators.text import (
         quality_score,

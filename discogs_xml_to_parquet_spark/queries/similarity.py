@@ -54,9 +54,6 @@ def q_ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.brute_force_topk(e.filter(F.col("id") < 5), e, k=5).orderBy("q_id", "rank")
 
 
-_planes_sql = S.planes_sql
-
-
 @query(
     "q_ann_lsh_buckets",
     oracle=f"""

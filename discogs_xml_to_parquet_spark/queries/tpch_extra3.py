@@ -26,9 +26,6 @@ from discogs_xml_to_parquet_spark.functions.exact import dsum
 from discogs_xml_to_parquet_spark.registry import query
 from discogs_xml_to_parquet_spark.tables import load
 
-_VOL_SQL = ("CAST(SUM(CAST(floor((l_extendedprice * (1 - l_discount)) "
-            "* 1000000 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000")
-
 
 @query(
     "q4_order_priority",

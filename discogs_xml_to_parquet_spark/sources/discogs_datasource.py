@@ -79,13 +79,10 @@ class _ReleasesReader(DataSourceReader):
 
     def partitions(self) -> list[InputPartition]:
         # Driver-side listing only (file/dir/glob, any pyarrow.fs
-        # scheme); an empty listing is a real error, matching the
-        # strict lane's contract.
-        files = _list_input_files(self._path)
-        if not files:
-            raise ValueError(
-                f"discogs_releases: no input files under {self._path!r}")
-        return [_ReleaseFilePartition(p) for p in files]
+        # scheme); _list_input_files raises on an empty listing,
+        # matching the strict lane's contract.
+        return [_ReleaseFilePartition(p)
+                for p in _list_input_files(self._path)]
 
     def read(self, partition: _ReleaseFilePartition) -> Iterator[tuple]:
         # Executor-side: stream-parse one file; rows go back to the
@@ -155,7 +152,7 @@ class _ReleasesStreamReader(DataSourceStreamReader):
         yield from _parse_file_stream(partition.path)
 
     def commit(self, end: dict) -> None:
-        # Nothing to clean up: offsets are listing positions and the
+        # Nothing to clean up: offsets are file sets and the
         # checkpoint's own offset log is the source of truth.
         pass
 

@@ -88,41 +88,26 @@ def work_dir(kind: str, key: str) -> str:
     return str(path)
 
 
-def stage_df(df, eager=True):
+def stage_df(df):
     """Cut lineage and materialize a mid-computation frame -- the ONE
     way the engine does so (setsim's fan-out frames, graph_iter's label
     rounds, matching's candidate pool, incremental's stored MV, the
-    connected-components rounds, prefix's bucketed domain and every
-    query's multi-consumer aggregate). The two deliberate exceptions
-    are graph_iter's persist() (below) and formats_extra's cache(),
-    which Spark requires before a corrupt-record-column-only scan.
+    two-phase connected-components rounds, prefix's bucketed domain and
+    every query's multi-consumer aggregate). The two deliberate
+    exceptions are graph_iter's persist() (below) and formats_extra's
+    cache(), which Spark requires before a corrupt-record-column-only
+    scan.
 
-    Default = `localCheckpoint(eager=eager)`: executor-memory blocks,
-    zero I/O, NON-reliable -- on a real cluster a lost executor fails
-    the job instead of recomputing (VERDICT r12 item 5). Production
-    mode: set SPARK_GRAFT_CHECKPOINT_DIR (e.g. an HDFS/S3 path via
+    Default = `localCheckpoint()`: executor-memory blocks, zero I/O,
+    NON-reliable -- on a real cluster a lost executor fails the job
+    instead of recomputing (VERDICT r12 item 5). Production mode: set
+    SPARK_GRAFT_CHECKPOINT_DIR (e.g. an HDFS/S3 path via
     `spark.checkpoint.dir` conventions) and the same call sites write
     RELIABLE checkpoints there, so at 1000 executors a lost node
     replays from the checkpoint store. The env is read per call, so
     one pytest process can exercise both modes back-to-back.
 
-    `eager=False` (the round loop of connected_components, the
-    distributed min-label labeling; connected_components_auto labels
-    small graphs on the driver and runs no rounds): the lineage cut
-    is immediate -- the returned frame's plan is a LogicalRDD -- but
-    the blocks are written by the first action on the result, so the
-    round's materialization rides its convergence count. Measured on a
-    10-node chain (9 rounds, local[4], 8 shuffle partitions, AQE on):
-    8 jobs per round, 6 of them AT the stage_df call (AQE plans the
-    frame by running its shuffle query stages) and 2 at the count
-    (the final stage, which writes the blocks, and the count's
-    result), against 9 per round with eager staging. The fusion saves
-    one job per round, not the shuffle work. Reliable mode ignores
-    `eager` and always checkpoints eagerly: checkpoint() re-runs the
-    frame's computation to write its files, so fusing buys nothing
-    there.
-
-    Neither form keeps the staged frame's hash partitioning for its
+    Neither mode keeps the staged frame's hash partitioning for its
     consumers under AQE: measured, `repartition("src")` staged either
     way and then grouped by src plans a fresh
     `Exchange hashpartitioning(src)`. Only persist() does --
@@ -142,5 +127,5 @@ def stage_df(df, eager=True):
         cur = sc.getCheckpointDir()
         if not (cur and ckpt_dir.rstrip("/") in cur):
             sc.setCheckpointDir(ckpt_dir)
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=eager)
+        return df.checkpoint()
+    return df.localCheckpoint()

@@ -169,19 +169,19 @@ def test_strict_rejects_empty_artist_id_and_name(spark):
 
 
 def test_connected_components_raises_on_non_convergence(spark):
-    """A path graph of diameter > max_iter must raise, not silently
-    return split components (ADVICE r1)."""
+    """A graph that needs more rounds than max_iter must raise, not
+    silently return split components (ADVICE r1)."""
     from discogs_xml_to_parquet_spark.operators.graph import (
-        connected_components,
+        connected_components_two_phase,
     )
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "src long, dst long"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_iter=2)
+        connected_components_two_phase(edges, max_iter=1)
     # and with enough rounds it converges to a single component
-    comp = connected_components(edges, max_iter=15)
+    comp = connected_components_two_phase(edges, max_iter=15)
     assert {r.comp for r in comp.collect()} == {0}
 
 
@@ -411,20 +411,59 @@ def test_native_failfast_malformed_bool(spark, tmp_path):
         dx.read_releases(spark, str(p), mode="FAILFAST").collect()
 
 
-def test_two_phase_cc_matches_min_label(spark):
-    """large-star/small-star must produce the same component labeling
-    as min-label propagation on path, star, clique, and random graphs
-    (incl. the deep-path case where min-label needs diameter rounds but
-    two-phase needs O(log^2 d)), and so must both paths of the size
-    dispatcher. A path deeper than max_iter is past min-label's reach,
-    so two-phase is the reference there."""
-    import random
+def _union_find_labels(pairs):
+    """{(node, min node of its component)} by union-find over a Python
+    edge list -- a reference that shares no code with the engine."""
+    parent = {}
 
-    from discogs_xml_to_parquet_spark.operators.graph import (
-        connected_components,
-        connected_components_auto,
-        connected_components_two_phase,
-    )
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {(x, find(x)) for x in parent}
+
+
+def _cc_paths(spark, monkeypatch, pairs):
+    """{path name: {(id, comp)}} for every connected-components path:
+    two-phase, and the entry point's driver and above-bound branches
+    (the bound monkeypatched to 0 forces the latter)."""
+    from discogs_xml_to_parquet_spark.operators import graph as G
+
+    edges = spark.createDataFrame(pairs, "src long, dst long")
+
+    def labels(fn):
+        return {(r.id, r.comp) for r in fn(edges).collect()}
+
+    out = {
+        "two_phase": labels(G.connected_components_two_phase),
+        "driver": labels(G.connected_components),
+    }
+    two_phase, calls = G.connected_components_two_phase, []
+
+    def spy(*args, **kwargs):
+        calls.append(args)
+        return two_phase(*args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(G, "SMALL_GRAPH_EDGES", 0)
+        m.setattr(G, "connected_components_two_phase", spy)
+        out["above_bound"] = labels(G.connected_components)
+    # an empty graph is within any bound
+    assert len(calls) == (1 if pairs else 0), "bound 0 must take two-phase"
+    return out
+
+
+def test_cc_paths_match_union_find(spark, monkeypatch):
+    """Every connected-components path labels like union-find on path,
+    star, clique and random graphs, including a path deeper than
+    two-phase's default max_iter that min-label propagation would need
+    60 rounds for."""
+    import random
 
     rng = random.Random(7)
     cases = {
@@ -439,8 +478,6 @@ def test_two_phase_cc_matches_min_label(spark):
         # parent-and-member convergence check alone would wrongly call
         # a fixpoint (node 3 has two parents; 1 and 2 must merge)
         "shared_member": [(1, 3), (2, 3)],
-        # deeper than max_iter=25: min-label raises, the dispatcher's
-        # driver pass has no depth limit
         "deep_path": [(i, i + 1) for i in range(60)],
         "dup_and_reversed": [(1, 2), (2, 1), (1, 2), (7, 3), (3, 7), (3, 4)],
         "empty": [],
@@ -448,65 +485,18 @@ def test_two_phase_cc_matches_min_label(spark):
 
     for name, pairs in cases.items():
         pairs = [(a, b) for a, b in pairs if a != b]
-        edges = spark.createDataFrame(pairs, "src long, dst long")
-        two = {
-            (r.id, r.comp)
-            for r in connected_components_two_phase(edges).collect()
-        }
+        ref = _union_find_labels(pairs)
+        assert ref or not pairs
         if name == "deep_path":
-            with pytest.raises(RuntimeError, match="did not converge"):
-                connected_components(edges)
-            base = two
-            assert base == {(i, 0) for i in range(61)}
-        else:
-            base = {
-                (r.id, r.comp) for r in connected_components(edges).collect()
-            }
-        assert two == base, f"{name}: {sorted(two)} != {sorted(base)}"
-        assert len(two) > 0 or not pairs
-        # the size dispatcher must be invisible to results on BOTH of
-        # its paths: the driver pass (every fixture is under the
-        # default threshold) and the forced two-phase path (threshold 0)
-        auto_small = {
-            (r.id, r.comp)
-            for r in connected_components_auto(edges).collect()
-        }
-        auto_large = {
-            (r.id, r.comp)
-            for r in connected_components_auto(
-                edges, small_graph_edges=0
-            ).collect()
-        }
-        assert auto_small == base, f"{name} (auto/driver path)"
-        assert auto_large == base, f"{name} (auto/two-phase path)"
+            assert ref == {(i, 0) for i in range(61)}
+        for path, got in _cc_paths(spark, monkeypatch, pairs).items():
+            assert got == ref, f"{name} ({path}): {sorted(got)}"
 
 
-def test_two_phase_cc_keeps_self_loop_nodes(spark):
+def test_two_phase_cc_keeps_self_loop_nodes(spark, monkeypatch):
     """A node whose only edge is a self-loop must still appear (as its
-    own component) -- every CC variant and both dispatcher paths, same
-    output."""
-    from discogs_xml_to_parquet_spark.operators.graph import (
-        connected_components,
-        connected_components_auto,
-        connected_components_two_phase,
-    )
-
-    edges = spark.createDataFrame(
-        [(5, 5), (1, 2)], "src long, dst long"
-    )
-    base = {(r.id, r.comp) for r in connected_components(edges).collect()}
-    two = {
-        (r.id, r.comp)
-        for r in connected_components_two_phase(edges).collect()
-    }
-    auto_small = {
-        (r.id, r.comp) for r in connected_components_auto(edges).collect()
-    }
-    auto_large = {
-        (r.id, r.comp)
-        for r in connected_components_auto(
-            edges, small_graph_edges=0
-        ).collect()
-    }
-    assert two == base == {(5, 5), (1, 1), (2, 1)}
-    assert auto_small == auto_large == base
+    own component) -- on every connected-components path."""
+    pairs = [(5, 5), (1, 2)]
+    assert _union_find_labels(pairs) == {(5, 5), (1, 1), (2, 1)}
+    for path, got in _cc_paths(spark, monkeypatch, pairs).items():
+        assert got == {(5, 5), (1, 1), (2, 1)}, path

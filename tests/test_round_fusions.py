@@ -71,7 +71,7 @@ def test_capstone_exact_edges_are_redundant(spark):
     ).select("id1", "id2").localCheckpoint()
 
     def survivors(pairs):
-        comp = G.connected_components_auto(
+        comp = G.connected_components(
             pairs.select(
                 F.col("id1").alias("src"), F.col("id2").alias("dst")
             )

@@ -100,14 +100,13 @@ def test_reliable_mode_covers_the_iterative_lane(spark, ckpt_dir):
 
 
 def test_reliable_mode_covers_connected_components(spark, ckpt_dir):
-    """operators/graph.py's fixpoints (min-label AND two-phase) stage
-    every round through stage_df too (r13: they were raw
-    localCheckpoints, the one staged surface VERDICT r12 item 5's
-    migration missed). Both algorithms under reliable checkpoints must
-    label identically to the default mode, and the checkpoint dir must
-    actually receive files from the round loop."""
+    """operators/graph.py's two-phase fixpoint stages every round
+    through stage_df too (r13: its rounds were raw localCheckpoints,
+    the one staged surface VERDICT r12 item 5's migration missed).
+    Under reliable checkpoints it must label exactly as in the default
+    mode, and the checkpoint dir must actually receive files from the
+    round loop."""
     from discogs_xml_to_parquet_spark.operators.graph import (
-        connected_components,
         connected_components_two_phase,
     )
 
@@ -116,16 +115,17 @@ def test_reliable_mode_covers_connected_components(spark, ckpt_dir):
         ["src", "dst"],
     )
 
-    def labels(fn):
-        return sorted(tuple(r) for r in fn(edges).collect())
+    def labels():
+        return sorted(
+            tuple(r) for r in connected_components_two_phase(edges).collect()
+        )
 
-    default_min = labels(connected_components)
-    default_two = labels(connected_components_two_phase)
-    assert default_min == default_two  # the documented equivalence
+    default = labels()
+    assert default == [(1, 1), (2, 1), (3, 1), (4, 4), (5, 4), (6, 6),
+                       (7, 7), (8, 7), (9, 7), (10, 7)]
 
     os.environ["SPARK_GRAFT_CHECKPOINT_DIR"] = ckpt_dir
-    assert labels(connected_components) == default_min
-    assert labels(connected_components_two_phase) == default_two
+    assert labels() == default
     written = [p for p in Path(ckpt_dir).rglob("*") if p.is_file()]
     assert written, "reliable mode engaged but wrote no checkpoint files"
 
@@ -154,7 +154,8 @@ def test_stage_df_is_the_only_lineage_cut():
     """Structural: every localCheckpoint / checkpoint / persist /
     cache CALL in the engine (comments and docstrings don't count) is
     stage_df's own or one of the documented exceptions, so reliable
-    mode cannot be bypassed by a raw call at a new site."""
+    mode cannot be bypassed by a raw call at a new site, and none of
+    them is lazy."""
     calls = Counter(
         (rel, node.func.attr)
         for rel, tree in _engine_modules()
@@ -164,6 +165,14 @@ def test_stage_df_is_the_only_lineage_cut():
         and node.func.attr in MATERIALIZERS
     )
     assert calls == ALLOWED_CALLS
+    # every cut is eager: no call in the engine passes an `eager` flag
+    lazy = [
+        rel
+        for rel, tree in _engine_modules()
+        for node in ast.walk(tree)
+        if isinstance(node, ast.keyword) and node.arg == "eager"
+    ]
+    assert not lazy, f"eager= passed in {lazy}"
 
 
 def test_checkpoint_dir_env_read_only_in_staging():

@@ -10,10 +10,11 @@ and r8 suites both went red at judging time because the driver landing
 the round's artifact re-ranked the just-checked queries -- a designed
 tripwire that fired twice is a process bug. window(max_round=
 DERIVED_AT_ROUND) ignores artifacts newer than the pinned round, so
-landing CORRECTNESS_r14.json cannot flip this suite; re-deriving for
-r15 is one deliberate commit: bump DERIVED_AT_ROUND to 14, update
-CHANGED/PIN, and paste the order printed by
-`python scripts/window_plan.py --max-round 14 --changed <r15 changed>`.
+landing the next CORRECTNESS_r*.json cannot flip this suite;
+re-deriving is one deliberate commit: bump DERIVED_AT_ROUND to the
+newest artifact's round, update CHANGED/PIN, and paste the order
+printed by
+`python scripts/window_plan.py --max-round <round> --changed <changed>`.
 """
 
 from __future__ import annotations
@@ -24,37 +25,32 @@ registry.load_all_queries()
 
 WINDOW_SIZE = 50
 
-# The round whose artifacts this derivation used (artifacts r1..r13;
-# CORRECTNESS_r14.json and later are ignored by the fixed-point test).
-DERIVED_AT_ROUND = 13
+# The round whose artifacts this derivation used (artifacts r1..r15;
+# CORRECTNESS_r16.json and later are ignored by the fixed-point test).
+DERIVED_AT_ROUND = 15
 
-# Round-14 policy inputs that artifacts cannot express -- queries whose
-# code changed since their LAST green driver row: the late-r13
-# operators/graph.py staging migration (raw localCheckpoint ->
-# staging.stage_df, value-identical by construction and pinned
-# both-modes in test_staging_modes.py) touches the connected-
-# components consumers. The matching/graph_iter CC consumers were
-# driver-checked AFTER that commit landed (they sat in the r13
-# window), so only the dedup/curation group lanes -- whose last green
-# row predates the migration -- carry a CHANGED mark. The last three
-# entries are r14 IN-ROUND rewrites of r13-green queries: the
-# interned-token setsim verification, the pre-divided PageRank rank
-# vector, and planned_read's planned-file-list return (the lakehouse
-# helper the new snapshot_read lane composes):
-R14_CHANGED = frozenset({
-    "q_dedup_minhash_lsh", "q_dedup_simhash_banded",
-    "q_dedup_semantic", "q_curation_pipeline",
-    "q_entity_resolution",
-    "q_setsim_prefix_join", "q_pagerank_bipartite",
-    "q_lakehouse_read_path",
+# Policy inputs that artifacts cannot express -- queries whose code
+# changed since their LAST green driver row (r15 for most, r10 for the
+# quality_model/multimodal_audio/decontam/scoring lanes):
+# - the three connected-components consumers moved from min-label
+#   rounds onto the size-dispatched operators/graph.py entry point;
+# - the tables.load_spread users, whose spread went from a fixed 64
+#   partitions to defaultParallelism (q_curation_pipeline is also the
+#   dispatcher's original consumer).
+CHANGED = frozenset({
+    "q_dedup_components", "q_curation_keep_best", "q_entity_resolution",
+    "q_curation_pipeline", "q_dedup_minhash_lsh", "q_dedup_simhash_banded",
+    "q_decontaminate_ngram", "q_quality_classifier",
+    "q_multimodal_audio_energy", "q_tfidf_top_terms",
+    "q_text_fingerprint", "q_dedup_chunks",
 })
-R14_PIN: tuple[str, ...] = ()
+PIN: tuple[str, ...] = ()
 
 
 def test_import_order_is_policy_fixed_point():
     """The first 50 registered queries ARE the policy window."""
     want = registry.window(
-        size=WINDOW_SIZE, changed=R14_CHANGED, pin=R14_PIN,
+        size=WINDOW_SIZE, changed=CHANGED, pin=PIN,
         max_round=DERIVED_AT_ROUND,
     )
     got = list(registry.QUERIES)[:WINDOW_SIZE]
@@ -86,10 +82,10 @@ def test_derivation_is_stable_under_new_artifacts(tmp_path):
     (tmp_path / "CORRECTNESS_r99.json").write_text(json.dumps(fake))
     pinned = registry.window(
         size=WINDOW_SIZE, artifacts_dir=str(tmp_path),
-        changed=R14_CHANGED, pin=R14_PIN, max_round=DERIVED_AT_ROUND,
+        changed=CHANGED, pin=PIN, max_round=DERIVED_AT_ROUND,
     )
     baseline = registry.window(
-        size=WINDOW_SIZE, changed=R14_CHANGED, pin=R14_PIN,
+        size=WINDOW_SIZE, changed=CHANGED, pin=PIN,
         max_round=DERIVED_AT_ROUND,
     )
     assert pinned == baseline
@@ -110,81 +106,49 @@ def test_window_contains_every_never_checked_query():
     assert not missing, f"never-checked queries outside window: {missing}"
 
 
-def test_r14_window_contents():
-    """The round-14 membership decisions, pinned explicitly: the
-    rank-0 arrival leads (q_snapshot_read -- the composed snapshot
-    read -- with its changed lakehouse import folding in first), then
-    matching (its CHANGED member q_entity_resolution pulls the module
-    up), the dedup/curation CHANGED cohort with its dependency folds,
-    the two in-round rewrites (setsim, graph_iter), runtime_filters
-    -- whose q_join_bucketed + q_join_bloom_dpp are the two
-    r9-evidence queries the late-r13 arrivals displaced -- and the
-    r9-evidence cohort: binary_source, tpch_extra3, layout, the full
-    text_analysis seven, and windows closing the cut at exactly 50.
-    After this window the r9-evidence set shrinks from 37 to 18
-    (subqueries, semistructured, relational, scalars, similarity
-    lead r15)."""
+def test_r16_window_contents():
+    """The round-16 membership decisions, pinned explicitly: every
+    CHANGED query is in, with its module and the modules it imports
+    (matching, then dedup and the curation_full fold, clustering +
+    curation_extra, text_analysis, then the r10-evidence
+    quality_model, multimodal_audio, decontam and scoring), and the
+    rest of the window goes to the oldest (r9) evidence: windows,
+    subqueries and semistructured, where the 50-cut lands. The
+    r9-evidence set shrinks to 15 (q_json_struct, relational, scalars,
+    similarity -- first in line next round)."""
     win = list(registry.QUERIES)[:WINDOW_SIZE]
+    assert CHANGED <= set(win), sorted(CHANGED - set(win))
     for must in (
-        # rank 0 + its changed dep; packing's rank-0 arrival
-        "q_snapshot_read", "q_lakehouse_read_path",
-        "q_pack_greedy",
-        # matching: CHANGED member + riding siblings
-        "q_entity_resolution", "q_fuzzy_levenshtein", "q_fuzzy_blocked",
-        "q_fuzzy_blocked_sampled", "q_funnel_conversion",
-        "q_fuzzy_blocked_stats",
-        # dedup: CHANGED members + r11 tail
-        "q_dedup_minhash_lsh", "q_dedup_simhash_banded",
-        "q_dedup_exact", "q_dedup_components", "q_dedup_containment",
+        # matching and dedup ride their CHANGED members
+        "q_fuzzy_levenshtein", "q_fuzzy_blocked_stats",
+        "q_dedup_exact", "q_dedup_containment",
         # the curation_full dependency fold
-        "q_pack_sequences", "q_quality_repetition",
-        "q_quality_gopher_filter", "q_curation_pipeline",
-        # curation_extra CHANGED member + its clustering dep
-        "q_dedup_semantic", "q_kmeans_assign", "q_kmeans_update",
-        "q_dedup_chunks", "q_budget_select",
-        # the in-round rewrites re-verify
-        "q_setsim_prefix_join", "q_pagerank_bipartite",
-        "q_label_propagation",
-        # the displaced r9 leads + their riding sibling
-        "q_join_bucketed", "q_join_bloom_dpp", "q_join_aqe_skew",
-        # the r9-evidence cohort
-        "q_source_binaryfile",
-        "q4_order_priority", "q8_market_share", "q12_priority_class",
-        "q_zorder_layout",
-        "q_text_stats", "q_text_quality", "q_text_langid",
-        "q_text_token_regex", "q_text_fingerprint",
-        "q_text_rolling_winnow", "q_text_langid_ngram",
-        "q_window_topk_per_group", "q_window_running",
-        "q_window_range_frame",
+        "q_pack_sequences", "q_pack_greedy", "q_quality_repetition",
+        "q_quality_gopher_filter",
+        # curation_extra's clustering dep
+        "q_kmeans_assign", "q_kmeans_update", "q_dedup_semantic",
+        # r10-evidence siblings of CHANGED load_spread users
+        "q_quality_rare_bigrams", "q_decontaminate_bloom",
+        "q_bm25_search", "q_inverted_index",
+        # the oldest evidence fills the rest
+        "q_window_rank_dense", "q_subquery_scalar",
+        "q_subquery_correlated", "q_subquery_in",
     ):
         assert must in win, must
-    assert win[0] == "q_lakehouse_read_path"  # snapshot_read's dep
-    assert win[1] == "q_snapshot_read"        # the rank-0 arrival
-    assert win[-1] == "q_window_range_frame"  # cut inside windows
+    assert win[0] == "q_fuzzy_levenshtein"  # matching leads
+    assert win[-1] == "q_map_funcs"         # cut inside semistructured
     for out in (
-        # r9-green past the cut: first in line for r15
-        "q_window_rank_dense",
-        "q_subquery_scalar", "q_subquery_correlated", "q_subquery_in",
-        "q_map_funcs", "q_json_struct",
-        "q1_pricing_summary", "q_filter_project", "q_string_funcs",
-        "q_ann_bruteforce_topk", "q_ann_lsh_buckets",
-        # r13-green stays out (freshest evidence)
-        "q_bpe_encode", "q_file_skipping_scan",
-        "q_merge_upsert", "q_incremental_rollup", "q_retention_ttl",
-        "q_stream_dedup_exact", "q_agg_approx_distinct",
-        "q13_customer_distribution", "q_asof_join", "q_cohort_retention",
-        "q_setops_nations", "q_multimodal_features", "q_pii_redact",
-        "q_range_join_events",
-        # r10/r11/r12-green stays out
-        "q_profile_columns", "q_distribution_drift",
-        "q_sessionize_events", "q_scd2_merge", "q_stream_merge_sink",
-        "q_stream_restart", "q_schema_evolution_widening",
-        "q_multimodal_image_decode", "q_partition_evolution",
-        "q_source_python_datasource", "q10_returned_items",
-        "q_delete_positional_dv", "q_theta_set_algebra",
-        "q_bucket_pruning", "q_nested_collect", "q_join_semi",
-        "q_pandas_udf_scalar", "q_pivot", "q_hll_union_rollup",
-        "q_constraint_audit", "discogs_xml_conversion", "q_stats_mad",
+        # r9-green past the cut: first in line next round
+        "q_json_struct", "q1_pricing_summary", "q_filter_project",
+        "q_string_funcs", "q_ann_bruteforce_topk", "q_ann_lsh_buckets",
+        # r15-green, unchanged: rotated out
+        "q_snapshot_read", "q_lakehouse_read_path",
+        "q_setsim_prefix_join", "q_pagerank_bipartite",
+        "q_label_propagation", "q_join_bucketed", "q_join_bloom_dpp",
+        "q_source_binaryfile", "q4_order_priority", "q_zorder_layout",
+        # r10-r13-green stays out
+        "q_profile_columns", "q_sessionize_events", "q_scd2_merge",
+        "q_stats_mad", "q_bpe_encode", "q_incremental_rollup",
     ):
         assert out not in win, out
 
