@@ -4,13 +4,14 @@ JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: median_sec}, "spread": {name: [min, max]}, "n": runs,
 "sf": ...}.
 
-Each query is executed via a count-style action that forces full
-evaluation without collecting results to the driver. Per-query numbers
-are MEDIANS of N_RUNS interleaved passes (r4 verdict item 3: single-shot
-timings made 1.2-1.3x sandbox drift indistinguishable from real
-regressions); the warmup pass is excluded from the numbers, and passes
-are interleaved round-robin (all queries per pass, not all passes per
-query) so slow drift cancels instead of biasing one query."""
+Each query is executed by `force`, a write to the noop sink that
+materializes every output column without collecting results to the
+driver. Per-query numbers are MEDIANS of N_RUNS interleaved passes (r4
+verdict item 3: single-shot timings made 1.2-1.3x sandbox drift
+indistinguishable from real regressions); the warmup pass is excluded
+from the numbers, and passes are interleaved round-robin (all queries
+per pass, not all passes per query) so slow drift cancels instead of
+biasing one query. Every timed lane runs through `_timed_passes`."""
 
 from __future__ import annotations
 
@@ -18,9 +19,13 @@ import json
 import os
 import sys
 import time
+from functools import partial, reduce
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
+
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from discogs_xml_to_parquet_spark import registry
 from discogs_xml_to_parquet_spark.session import get_spark
@@ -170,10 +175,8 @@ _SF1_CORPUS_VERSION = 4
 # `python scripts/sf10_spot.py` (pass count via
 # SPARK_GRAFT_SF10_PASSES; corpus build + triple-interleaved passes
 # cost tens of minutes, far past the driver's per-round budget); the
-# run lands at bench_records/SF10_SPOT.json -- a committed run of record
-# -- and every subsequent bench run embeds that record into
-# BENCH_DETAIL as `sf10_spot` (marked "recorded": true) so the round
-# artifact carries the curve without re-paying the run.
+# run lands at bench_records/SF10_SPOT.json, the committed run of
+# record. bench.py itself neither runs nor embeds it.
 SF10_QUERIES = [
     "q_fuzzy_blocked",
     # r14 (VERDICT r13 item 2): the sampled twin rides the lane at the
@@ -265,10 +268,11 @@ def _clean_pass_filter(spins: list[float], busy_fracs: list[float],
 
 def _true_med(xs: list[float], nd: int = 3) -> float:
     """Proper median: averages the middle pair for even-length input.
-    The headline lane's upper-middle shortcut is harmless over 5
-    passes, but the FILTERED medians often see 2 clean passes, where
-    upper-middle degenerates to max() and biases the clean number
-    ABOVE the raw one it exists to correct."""
+    The only median in the harness: an upper-middle shortcut agrees
+    with it over the odd pass counts the lanes run, but the FILTERED
+    medians often see 2 clean passes (and an over-budget lane may
+    account 2), where upper-middle degenerates to max() and biases
+    the number ABOVE the raw one it exists to correct."""
     s = sorted(xs)
     n = len(s)
     m = s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2
@@ -292,6 +296,154 @@ def _spin_calib(n: int = 2_000_000) -> float:
         x += i * i
     assert x >= 0  # keep the loop un-optimizable
     return round(time.perf_counter() - t0, 4)
+
+
+def force(spark, name: str, sf_dir: str) -> None:
+    """Run registered query `name` over the tables at `sf_dir` to
+    completion. The noop sink forces every output column to be
+    materialized -- count() would let Catalyst prune the projection --
+    without collecting a row to the driver. The one action every
+    timed lane, scripts/perf_sweep.py and the pinned job counts in
+    tests/test_job_groups.py run, so a pinned count counts the action
+    the bench times."""
+    registry.QUERIES[name](spark, sf_dir).write.format("noop").mode(
+        "overwrite").save()
+
+
+def _timed_passes(spark, cells: list, passes: int, gc: bool = False,
+                  budget_s: float | None = None) -> dict:
+    """Time `cells`, an ordered list of (key, thunk), over `passes`
+    interleaved passes: every cell once per pass, in order, so slow
+    drift cancels across keys instead of biasing one.
+
+    - COLD cache (r15, VERDICT r14 item 4): each pass starts with
+      clearCache(). q_pagerank_bipartite persists its edge list and
+      CacheManager dedupes by canonicalized plan, so without it
+      passes 2+ hit a cache built in pass 1 -- the median measured
+      cache reuse, not what a fresh job pays.
+    - Attribution per pass: a spin calibration (_spin_calib), wall
+      and system busy-CPU seconds, so a throttled or shared pass is
+      adjudicable from the artifact (busy_frac, eff_cores, and the
+      clean-pass medians of _clean_pass_filter next to the raw ones).
+    - gc (JMH discipline, r12): a forced JVM GC before every cell, so
+      one query's garbage never bills the NEXT cell's wall as old-gen
+      pressure (q_fuzzy_blocked's 7.2M-pair shuffles directly
+      precede setsim at sf1: 19 s after fuzzy vs 13.5 s solo). The
+      headline stays GC-free: its raw value is the round-over-round
+      comparable and its queries are too small for cross-billing.
+    - budget_s: lane wall budget, checked after every cell (ADVICE
+      r7: one throttled pass could otherwise overshoot by minutes)
+      but only once a full pass is accounted, so no key is ever
+      empty. A pass cut short is DROPPED whole (ADVICE r13): it has
+      no wall/cpu row, so its samples would be unauditable by the
+      clean-pass filter. Every key keeps exactly one sample per
+      accounted pass, and `passes` counts those."""
+    jvm_gc = spark.sparkContext._jvm.System.gc
+    runs: dict = {key: [] for key, _ in cells}
+    pass_wall: list[float] = []
+    pass_cpu: list[float] = []
+    spin_sec: list[float] = []
+    over_budget = False
+    lane_t0 = time.perf_counter()
+    for _ in range(passes):
+        spark.catalog.clearCache()
+        spin = _spin_calib()
+        pw0, pc0 = time.perf_counter(), _cpu_busy()
+        sample = []
+        for key, thunk in cells:
+            if gc:
+                jvm_gc()
+            t0 = time.perf_counter()
+            thunk()
+            sample.append((key, time.perf_counter() - t0))
+            over_budget = (budget_s is not None and bool(pass_wall)
+                           and time.perf_counter() - lane_t0 > budget_s)
+            if over_budget:
+                break
+        if len(sample) == len(cells):
+            pass_wall.append(round(time.perf_counter() - pw0, 3))
+            pass_cpu.append(round(_cpu_busy() - pc0, 3))
+            spin_sec.append(spin)
+            for key, t in sample:
+                runs[key].append(t)
+        if over_budget:
+            break
+    busy_frac = [round(c / (w * os.cpu_count()), 3)
+                 for c, w in zip(pass_cpu, pass_wall)]
+    clean = _clean_pass_filter(spin_sec, busy_frac)
+    return {
+        "median": {k: _true_med(ts) for k, ts in runs.items()},
+        "spread": {k: [round(min(ts), 3), round(max(ts), 3)]
+                   for k, ts in runs.items()},
+        "clean_passes": clean,
+        "clean_median": {k: _true_med([ts[i] for i in clean])
+                         for k, ts in runs.items()},
+        "passes": len(pass_wall),
+        "over_budget": over_budget,
+        "pass_wall": pass_wall,
+        "pass_cpu": pass_cpu,
+        "spin_sec": spin_sec,
+        "busy_frac": busy_frac,
+        # effective cores per pass: busy-cpu seconds / wall seconds; a
+        # pass whose wall inflates while eff_cores DROPS was starved by
+        # the host, not slowed by the code
+        "eff_cores": [round(c / w, 2) for c, w in zip(pass_cpu, pass_wall)],
+    }
+
+
+def _ratio(num: dict, den: dict) -> dict:
+    """Per-key num/den wall ratio (2 dp), for every key den times."""
+    return {n: round(num[n] / den[n], 2) for n in num if den.get(n)}
+
+
+# the per-pass accounting of a _timed_passes result, as a lane's record
+# carries it
+_PASS_STATS = ("passes", "over_budget", "pass_wall", "pass_cpu",
+               "spin_sec", "busy_frac", "eff_cores")
+
+
+def _build_sharded_corpus(spark, src: str, dest: str, tables: dict,
+                          shards: int, text_of) -> None:
+    """`shards` id-offset shards of `tables` (table -> id columns)
+    under `dest`, plus _SF1_DIMS copied verbatim -- the skeleton both
+    decade corpora share. Shard i adds i*1e8 to every id column
+    (disjoint join/graph keys per shard; BIGINT columns hold 99
+    shards comfortably), regenerates customer.c_name from a DENSE key
+    ('Customer#%09d' of i*n_rows + original), and rewrites
+    documents.text as text_of(i). Idempotent per (dest): a _BUILT
+    marker makes it a once-per-container cost."""
+    marker = Path(dest) / "_BUILT"
+    if marker.exists():
+        return
+    for table, idcols in tables.items():
+        df = spark.read.parquet(f"{src}/{table}.parquet")
+        n_rows = df.count() if table == "customer" else 0
+        parts = []
+        for i in range(shards):
+            c = df
+            for col in idcols:
+                c = c.withColumn(col, F.col(col) + F.lit(i * 100_000_000))
+            if table == "customer":
+                c = c.withColumn(
+                    "c_name",
+                    F.format_string(
+                        "Customer#%09d",
+                        F.col("c_custkey")
+                        + F.lit(i * n_rows - i * 100_000_000),
+                    ),
+                )
+            elif table == "documents":
+                c = c.withColumn("text", text_of(i))
+            parts.append(c)
+        reduce(DataFrame.unionAll, parts).write.mode("overwrite").parquet(
+            f"{dest}/{table}.parquet")
+    for table in _SF1_DIMS:
+        spark.read.parquet(f"{src}/{table}.parquet").write.mode(
+            "overwrite").parquet(f"{dest}/{table}.parquet")
+    marker.touch()
+
+
+_ALPHA = "abcdefghijklmnopqrstuvwxyz"
 
 
 def _build_10x_corpus(spark, src: str, dest: str, shards: int = 10) -> None:
@@ -322,41 +474,9 @@ def _build_10x_corpus(spark, src: str, dest: str, shards: int = 10) -> None:
     ways), so the construction is measured to be a faithful scale-up,
     not merely argued. Idempotent per (dest); built once per
     container."""
-    from pyspark.sql import functions as F
-
-    marker = Path(dest) / "_BUILT"
-    if marker.exists():
-        return
-    alpha = "abcdefghijklmnopqrstuvwxyz"
-    for table, idcols in _SF1_TABLES.items():
-        df = spark.read.parquet(f"{src}/{table}.parquet")
-        n_rows = df.count() if table == "customer" else 0
-        parts = []
-        for i in range(shards):
-            c = df
-            for col in idcols:
-                c = c.withColumn(col, F.col(col) + F.lit(i * 100_000_000))
-            if table == "customer":
-                c = c.withColumn(
-                    "c_name",
-                    F.format_string(
-                        "Customer#%09d",
-                        F.col("c_custkey")
-                        + F.lit(i * n_rows - i * 100_000_000),
-                    ),
-                )
-            elif table == "documents" and i > 0:
-                rot = alpha[i:] + alpha[:i]
-                c = c.withColumn("text", F.translate("text", alpha, rot))
-            parts.append(c)
-        u = parts[0]
-        for p in parts[1:]:
-            u = u.unionAll(p)
-        u.write.mode("overwrite").parquet(f"{dest}/{table}.parquet")
-    for table in _SF1_DIMS:
-        spark.read.parquet(f"{src}/{table}.parquet").write.mode(
-            "overwrite").parquet(f"{dest}/{table}.parquet")
-    marker.touch()
+    _build_sharded_corpus(
+        spark, src, dest, _SF1_TABLES, shards,
+        lambda i: F.translate("text", _ALPHA, _ALPHA[i:] + _ALPHA[:i]))
 
 
 def _shard_tag(i: int) -> str:
@@ -408,44 +528,10 @@ def _build_100x_corpus(spark, src: str, dest: str,
     invariant: q_stats_mad at 100x must equal q_stats_mad at 1x
     (also pinned in tests/test_sf10_corpus.py). Idempotent per
     (dest); built once per container."""
-    from pyspark.sql import functions as F
-
-    marker = Path(dest) / "_BUILT"
-    if marker.exists():
-        return
-    for table, idcols in _SF10_TABLES.items():
-        df = spark.read.parquet(f"{src}/{table}.parquet")
-        n_rows = df.count() if table == "customer" else 0
-        parts = []
-        for i in range(shards):
-            c = df
-            for col in idcols:
-                c = c.withColumn(col, F.col(col) + F.lit(i * 100_000_000))
-            if table == "customer":
-                c = c.withColumn(
-                    "c_name",
-                    F.format_string(
-                        "Customer#%09d",
-                        F.col("c_custkey")
-                        + F.lit(i * n_rows - i * 100_000_000),
-                    ),
-                )
-            elif table == "documents":
-                c = c.withColumn(
-                    "text",
-                    F.regexp_replace(
-                        "text", "([A-Za-z0-9]+)", "$1" + _shard_tag(i)
-                    ),
-                )
-            parts.append(c)
-        u = parts[0]
-        for p in parts[1:]:
-            u = u.unionAll(p)
-        u.write.mode("overwrite").parquet(f"{dest}/{table}.parquet")
-    for table in _SF1_DIMS:
-        spark.read.parquet(f"{src}/{table}.parquet").write.mode(
-            "overwrite").parquet(f"{dest}/{table}.parquet")
-    marker.touch()
+    _build_sharded_corpus(
+        spark, src, dest, _SF10_TABLES, shards,
+        lambda i: F.regexp_replace(
+            "text", "([A-Za-z0-9]+)", "$1" + _shard_tag(i)))
 
 
 def _run_sf10_lane(spark, sf_dir: str, sf: str,
@@ -471,68 +557,20 @@ def _run_sf10_lane(spark, sf_dir: str, sf: str,
     _build_100x_corpus(spark, sf_dir, sf10_dir)
     decades = (("sf100x", sf10_dir), ("sf10x", sf1_dir), ("sf1x", sf_dir))
 
-    def force_at(name: str, d: str) -> None:
-        registry.QUERIES[name](spark, d).write.format("noop").mode(
-            "overwrite").save()
-
     out_rows = {k: {} for k, _ in decades}
     for name in SF10_QUERIES:
         for dkey, ddir in decades:
             out_rows[dkey][name] = (
                 registry.QUERIES[name](spark, ddir).count())
-            force_at(name, ddir)  # warm: plan + codegen at these stats
+            force(spark, name, ddir)  # warm: plan + codegen at these stats
 
-    jvm_gc = spark.sparkContext._jvm.System.gc
-    runs = {k: {n: [] for n in SF10_QUERIES} for k, _ in decades}
-    pass_wall: list[float] = []
-    pass_cpu: list[float] = []
-    pass_spin: list[float] = []
-    done = 0
-    over_budget = False
-    lane_t0 = time.perf_counter()
-    for _ in range(passes):
-        # cold-cache passes (r15, VERDICT r14 item 4): the persisted
-        # lanes (PageRank's edge-list cache) otherwise measure warm
-        # cache from pass 2 on -- and the decade RATIOS mix a cold
-        # cell against a warm one. Every pass now pays the build.
-        spark.catalog.clearCache()
-        pass_spin.append(_spin_calib())
-        # samples-per-list snapshot: a budget break mid-pass discards
-        # the partial pass's timings so the medians only ever mix
-        # samples from passes with an accounted pass_wall/pass_cpu row
-        # (ADVICE r13: a partial pass has no wall/cpu entry, so its
-        # samples would be unauditable by the clean-pass filter)
-        pre = {k: {n: len(ts) for n, ts in qs.items()}
-               for k, qs in runs.items()}
-        pw0, pc0 = time.perf_counter(), _cpu_busy()
-        for name in SF10_QUERIES:
-            for dkey, ddir in decades:
-                jvm_gc()
-                t0 = time.perf_counter()
-                force_at(name, ddir)
-                runs[dkey][name].append(time.perf_counter() - t0)
-            if done >= 1 and time.perf_counter() - lane_t0 > budget_s:
-                over_budget = True
-                break
-        else:
-            done += 1
-            pass_wall.append(round(time.perf_counter() - pw0, 3))
-            pass_cpu.append(round(_cpu_busy() - pc0, 3))
-            continue
-        for k, qs in runs.items():
-            for n, ts in qs.items():
-                del ts[pre[k][n]:]
-        break
-    med = {
-        k: {n: _true_med(ts) for n, ts in qs.items() if ts}
-        for k, qs in runs.items()
-    }
-
-    def _ratio(num: dict, den: dict) -> dict:
-        return {
-            n: round(num[n] / den[n], 2)
-            for n in num if den.get(n)
-        }
+    r = _timed_passes(
+        spark,
+        [((dkey, name), partial(force, spark, name, ddir))
+         for name in SF10_QUERIES for dkey, ddir in decades],
+        passes, gc=True, budget_s=budget_s)
+    med = {k: {n: r["median"][(k, n)] for n in SF10_QUERIES}
+           for k, _ in decades}
 
     decade1 = _ratio(med["sf10x"], med["sf1x"])
     decade2 = _ratio(med["sf100x"], med["sf10x"])
@@ -540,27 +578,13 @@ def _run_sf10_lane(spark, sf_dir: str, sf: str,
         "sf_decades": {k: round(float(sf) * m, 4) for (k, _), m in
                        zip(decades, (100, 10, 1))},
         "queries": med,
-        "spread": {
-            k: {n: [round(min(ts), 3), round(max(ts), 3)]
-                for n, ts in qs.items() if ts}
-            for k, qs in runs.items()
-        },
+        "spread": {k: {n: r["spread"][(k, n)] for n in SF10_QUERIES}
+                   for k, _ in decades},
         "decade1_x": decade1,
         "decade2_x": decade2,
         "compound_x": _ratio(decade2, decade1),
         "out_rows": out_rows,
-        "passes": done,
-        "over_budget": over_budget,
-        "pass_wall": pass_wall,
-        "pass_cpu": pass_cpu,
-        "spin_sec": pass_spin,
-        "busy_frac": [
-            round(c / (w * os.cpu_count()), 3)
-            for c, w in zip(pass_cpu, pass_wall)
-        ],
-        "eff_cores": [
-            round(c / w, 2) for c, w in zip(pass_cpu, pass_wall)
-        ],
+        **{k: r[k] for k in _PASS_STATS},
         "corpus_version": _SF10_CORPUS_VERSION,
     }
 
@@ -574,63 +598,25 @@ def main() -> None:
     spark = get_spark(app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    def force(name: str) -> None:
-        # noop sink forces every output column to be materialized (count()
-        # would let Catalyst prune the projection)
-        registry.QUERIES[name](spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-
     # one warm pass: JVM/codegen/noop-datasource class loading and parquet
     # footer caching, so timed runs measure the query plan, not startup
     for name in names:
-        force(name)
+        force(spark, name, sf_dir)
 
     # 5 interleaved passes: the r6 sf0.1 run showed single-PASS host
     # stalls (VM steal / GC) inflating 3 unrelated queries 10-20x in
     # the same pass; a median of 5 needs two bad passes to move, where
     # a median of 3 moves on one. Spread still reports min/max so the
-    # stalls stay visible.
+    # stalls stay visible. Cold-cache passes (_timed_passes): the r14
+    # warm-median for pagerank was 3.5 s, so a higher r15 number for
+    # that one lane is the honest cold cost, not a regression
+    # (OPTIMIZATION_r15.md keeps both numbers).
     N_RUNS = 5
-    runs: dict[str, list[float]] = {name: [] for name in names}
-    pass_wall: list[float] = []
-    pass_cpu: list[float] = []
-    pass_spin: list[float] = []
-    for _ in range(N_RUNS):
-        # COLD-CACHE medians (r15, VERDICT r14 item 4 -- a deliberate,
-        # disclosed measurement fix): q_pagerank_bipartite persists its
-        # edge list, and CacheManager dedupes by canonicalized plan, so
-        # passes 2-5 previously hit a warm cache built in pass 1 -- the
-        # headline median measured cache reuse, not what a fresh job
-        # pays. Clearing between passes makes every pass pay the build;
-        # the r14 warm-median for pagerank was 3.5 s, so a higher r15
-        # number for that one lane is the honest cold cost, not a
-        # regression (OPTIMIZATION_r15.md keeps both numbers).
-        spark.catalog.clearCache()
-        pass_spin.append(_spin_calib())
-        pw0, pc0 = time.perf_counter(), _cpu_busy()
-        for name in names:
-            t0 = time.perf_counter()
-            force(name)
-            runs[name].append(time.perf_counter() - t0)
-        pass_wall.append(round(time.perf_counter() - pw0, 3))
-        pass_cpu.append(round(_cpu_busy() - pc0, 3))
-    timings = {
-        name: round(sorted(ts)[len(ts) // 2], 3) for name, ts in runs.items()
-    }
-    spread = {
-        name: [round(min(ts), 3), round(max(ts), 3)]
-        for name, ts in runs.items()
-    }
+    head = _timed_passes(
+        spark, [(n, partial(force, spark, n, sf_dir)) for n in names],
+        N_RUNS)
+    timings = head["median"]
     total = round(sum(timings.values()), 3)
-    # effective cores per pass: busy-cpu seconds / wall seconds. On an
-    # unthrottled 32-cpu box the heavier passes sit well above 1; a
-    # pass whose wall inflates while eff_cores DROPS was starved by the
-    # host, not slowed by the code.
-    busy_frac = [
-        round(c / (w * os.cpu_count()), 3)
-        for c, w in zip(pass_cpu, pass_wall)
-    ]
     # the SESSION's core count, read back from the master the session
     # actually runs with (r15, VERDICT r14 item 2): the harness honors
     # $SPARK_GRAFT_CPUS (session.py builds local[$SPARK_GRAFT_CPUS]),
@@ -644,17 +630,17 @@ def main() -> None:
         session_cpus = os.cpu_count()
     cpu_attr = {
         "cpus": session_cpus,
-        "pass_wall": pass_wall,
-        "pass_cpu": pass_cpu,
-        "eff_cores": [round(c / w, 2) for c, w in zip(pass_cpu, pass_wall)],
+        "pass_wall": head["pass_wall"],
+        "pass_cpu": head["pass_cpu"],
+        "eff_cores": head["eff_cores"],
         # fixed-workload clock calibration per pass: uniform query
         # slowdown + proportional spin_sec inflation = host throttle;
         # stable spin_sec + slower queries = real regression
-        "spin_sec": pass_spin,
+        "spin_sec": head["spin_sec"],
         # system-wide busy fraction per pass (VERDICT r11 item 6):
         # the bench's own work is constant across passes, so a pass
         # whose fraction jumps was sharing the box with a co-tenant
-        "busy_frac": busy_frac,
+        "busy_frac": head["busy_frac"],
         "os_cpus": os.cpu_count(),
     }
     # contamination-filtered headline NEXT TO the raw one (VERDICT r11
@@ -662,15 +648,10 @@ def main() -> None:
     # system-busy sit within tolerance of the round's cleanest pass,
     # so a round measured on a contended host self-adjudicates from
     # the artifact alone (r11's driver run needed commit archaeology).
-    clean = _clean_pass_filter(pass_spin, busy_frac)
-    timings_clean = {
-        name: _true_med([ts[i] for i in clean])
-        for name, ts in runs.items()
-    }
     filtered = {
-        "value": round(sum(timings_clean.values()), 3),
-        "clean_passes": clean,
-        "queries": timings_clean,
+        "value": round(sum(head["clean_median"].values()), 3),
+        "clean_passes": head["clean_passes"],
+        "queries": head["clean_median"],
     }
 
     # the reference's core job: gz-XML -> Snappy Parquet throughput over
@@ -736,30 +717,38 @@ def main() -> None:
     for _ in range(3):
         conv_runs.append(timed_run(xml_dir))
         conv32_runs.append(timed_run(xml_dir32))
-    conv_sec = sorted(w for w, _, _ in conv_runs)[1]
-    conv32_sec = sorted(w for w, _, _ in conv32_runs)[1]
+
+    def conv_record(files: int, cold: tuple, runs: list) -> dict:
+        sec = _true_med([w for w, _, _ in runs])
+        return {
+            "files": files,
+            "rows": n_rel,
+            "sec": sec,
+            "cold_sec": cold[0],
+            "rows_per_sec": round(n_rel / sec),
+            "runs_wall_cpu_spin": runs,
+            "eff_cores": [round(c / w, 2) for w, c, _ in runs],
+            "spin_sec": [s for _, _, s in runs],
+        }
 
     # long-tail spot-check lane (VERDICT r5 item 7): sample 5 of the
     # registered queries outside the headline set, seeded by the round
     # number (round = count of driver-recorded BENCH_r*.json + 1, so
     # each round rotates deterministically), and report the median of
-    # 3 timed runs each (after one warm run) so perf regressions
-    # outside the headline set get caught within a few rounds.
+    # 3 interleaved cold-cache passes (after one warm run each) so perf
+    # regressions outside the headline set get caught within a few
+    # rounds.
     import random
 
     round_no = 1 + len(list(Path(__file__).resolve().parent.glob(
         "BENCH_r*.json")))
     pool = sorted(n for n in registry.QUERIES if n not in set(names))
     longtail = random.Random(round_no).sample(pool, min(5, len(pool)))
-    lt_timings: dict[str, float] = {}
     for name in longtail:
-        force(name)  # warm: plan + codegen
-        lt_runs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            force(name)
-            lt_runs.append(time.perf_counter() - t0)
-        lt_timings[name] = round(sorted(lt_runs)[1], 3)  # median of 3
+        force(spark, name, sf_dir)  # warm: plan + codegen
+    lt_timings = _timed_passes(
+        spark, [(n, partial(force, spark, n, sf_dir)) for n in longtail],
+        3)["median"]
 
     # 10x spot lane (VERDICT r6 item 4): the 2x-of-BASELINE gate runs
     # at sf0.1 where fixed stage latencies dominate; this lane times
@@ -778,13 +767,6 @@ def main() -> None:
         sf1_dir = (f"{tempfile.gettempdir()}/spark_graft_10x_sf{sf}"
                    f"_v{_SF1_CORPUS_VERSION}")
         _build_10x_corpus(spark, sf_dir, sf1_dir)
-        sf1_timings: dict[str, float] = {}
-        sf1_runs: dict[str, list[float]] = {n: [] for n in SF1_QUERIES}
-
-        def force_sf1(name: str) -> None:
-            registry.QUERIES[name](spark, sf1_dir).write.format(
-                "noop").mode("overwrite").save()
-
         # warm pass doubles as the output-size probe: out_rows at both
         # SFs separate output-bound growth from plan regression (e.g.
         # fuzzy on zero-padded sequential numeric names has an
@@ -796,18 +778,8 @@ def main() -> None:
         for name in SF1_QUERIES:
             out_rows[name] = registry.QUERIES[name](spark, sf1_dir).count()
             out_rows_01[name] = registry.QUERIES[name](spark, sf_dir).count()
-            force_sf1(name)  # warm: plan + codegen at the new stats
-            force(name)      # warm the headline-SF twin too
-        # lane wall budget: the whole bench must finish inside the
-        # driver's timeout, and a throttled box can triple a pass --
-        # degrade to fewer (even partial) recorded passes rather than
-        # risk losing the entire JSON line. The budget is checked
-        # inside the per-query loop (ADVICE r7: a single throttled
-        # pass, ~10-60 s/query warm at 10x and up to 3x that, could
-        # otherwise overshoot by minutes before a between-pass check
-        # triggers) -- but only once every query has >= 1 timing, so
-        # the medians below never divide by an empty list. "passes"
-        # reports completed full passes.
+            force(spark, name, sf1_dir)  # warm: plan + codegen at new stats
+            force(spark, name, sf_dir)   # warm the headline-SF twin too
         # Each pass runs every query at sf1 IMMEDIATELY FOLLOWED by
         # its headline-SF twin (r12): the 10x ratio is the lane's
         # whole point, and its two sides must be measured under the
@@ -817,166 +789,58 @@ def main() -> None:
         # interior -- and the mismatch alone moved setsim's measured
         # ratio between 3.5x and 4.8x on an otherwise-quiet box.
         # Adjacent same-pass runs share session temperature, storage
-        # pressure, and whatever the co-tenant is doing.
-        #
-        # JMH discipline (r12): a forced JVM GC precedes every
-        # measured run, so one query's garbage (q_fuzzy_blocked's
-        # 7.2M-pair shuffles directly precede setsim) never bills the
-        # NEXT query's wall as old-gen pressure -- measured 19 s ->
-        # 15 s for setsim-after-fuzzy at sf1, while solo runs were
-        # 13.5 s all along. Headline passes stay GC-free: their raw
-        # value is the round-over-round comparable and its queries
-        # are too small for cross-billing to matter.
-        jvm_gc = spark.sparkContext._jvm.System.gc
-        sf01_runs: dict[str, list[float]] = {n: [] for n in SF1_QUERIES}
-        lane_t0 = time.perf_counter()
-        passes = 0
-        over_budget = False
-        sf1_pass_wall: list[float] = []
-        sf1_pass_cpu: list[float] = []
-        sf1_pass_spin: list[float] = []
-        for _ in range(3):
-            # cold-cache passes, same rule as the headline loop (r15)
-            spark.catalog.clearCache()
-            sf1_pass_spin.append(_spin_calib())
-            pw0, pc0 = time.perf_counter(), _cpu_busy()
-            for name in SF1_QUERIES:
-                jvm_gc()
-                t0 = time.perf_counter()
-                force_sf1(name)
-                t1 = time.perf_counter()
-                jvm_gc()
-                t1b = time.perf_counter()
-                force(name)
-                t2 = time.perf_counter()
-                sf1_runs[name].append(t1 - t0)
-                sf01_runs[name].append(t2 - t1b)
-                if (passes >= 1
-                        and time.perf_counter() - lane_t0 > 600):
-                    over_budget = True
-                    break
-            else:
-                passes += 1
-                sf1_pass_wall.append(round(time.perf_counter() - pw0, 3))
-                sf1_pass_cpu.append(round(_cpu_busy() - pc0, 3))
-                continue
-            break
-        sf1_timings = {
-            n: round(sorted(ts)[len(ts) // 2], 3)
-            for n, ts in sf1_runs.items()
-        }
-        sf01_timings = {
-            n: round(sorted(ts)[len(ts) // 2], 3)
-            for n, ts in sf01_runs.items()
-        }
+        # pressure, and whatever the co-tenant is doing. The 600 s
+        # budget keeps the whole bench inside its run timeout on a
+        # throttled box (fewer recorded passes rather than a lost JSON
+        # line); forced GC per run as in _timed_passes.
+        lane = _timed_passes(
+            spark,
+            [((k, n), partial(force, spark, n, d)) for n in SF1_QUERIES
+             for k, d in (("sf1", sf1_dir), ("sf01", sf_dir))],
+            3, gc=True, budget_s=600)
+
+        def lane_q(stat: str, k: str) -> dict:
+            return {n: lane[stat][(k, n)] for n in SF1_QUERIES}
+
+        sf1_timings = lane_q("median", "sf1")
+        sf01_timings = lane_q("median", "sf01")
         # contamination filter for the LANE too (same rule as the
-        # headline): the 10x ratios are the artifact's scale
-        # evidence, and a throttled lane pass inflates sf1 walls
-        # while the sf0.1 denominators come from a different time
-        # window -- the filtered ratios let a contended round
-        # self-adjudicate (guarded: zero completed passes on an
-        # over-budget box means no per-pass attribution to filter)
-        sf1_busy = [
-            round(c / (w * os.cpu_count()), 3)
-            for c, w in zip(sf1_pass_cpu, sf1_pass_wall)
-        ]
-        sf1_clean = (
-            _clean_pass_filter(sf1_pass_spin[:passes], sf1_busy)
-            if passes else []
-        )
-        sf1_filtered = {
-            n: _true_med([ts[i] for i in sf1_clean])
-            for n, ts in sf1_runs.items()
-            if sf1_clean and len(ts) >= passes
-        }
-        sf01_filtered = {
-            n: _true_med([ts[i] for i in sf1_clean])
-            for n, ts in sf01_runs.items()
-            if sf1_clean and len(ts) >= passes
-        }
+        # headline): the 10x ratios are the artifact's scale evidence,
+        # and a throttled lane pass inflates sf1 walls -- the filtered
+        # ratios let a contended round self-adjudicate
+        sf1_filtered = lane_q("clean_median", "sf1")
+        sf01_filtered = lane_q("clean_median", "sf01")
         sf1_spot = {
             "sf": round(float(sf) * 10, 4),
             "queries": sf1_timings,
-            "spread": {
-                n: [round(min(ts), 3), round(max(ts), 3)]
-                for n, ts in sf1_runs.items()
-            },
+            "spread": lane_q("spread", "sf1"),
             "queries_at_headline_sf": sf01_timings,
-            "vs_headline_x": {
-                n: round(sf1_timings[n] / sf01_timings[n], 2)
-                for n in SF1_QUERIES if sf01_timings.get(n)
-            },
-            "clean_passes": sf1_clean,
+            "vs_headline_x": _ratio(sf1_timings, sf01_timings),
+            "clean_passes": lane["clean_passes"],
             "queries_filtered": sf1_filtered,
-            "vs_headline_x_filtered": {
-                n: round(sf1_filtered[n] / sf01_filtered[n], 2)
-                for n in sf1_filtered if sf01_filtered.get(n)
-            },
+            "vs_headline_x_filtered": _ratio(sf1_filtered, sf01_filtered),
             "out_rows": out_rows,
             "out_rows_at_headline_sf": out_rows_01,
-            "passes": passes,
-            "over_budget": over_budget,
-            "pass_wall": sf1_pass_wall,
-            "pass_cpu": sf1_pass_cpu,
-            "spin_sec": sf1_pass_spin,
-            "busy_frac": [
-                round(c / (w * os.cpu_count()), 3)
-                for c, w in zip(sf1_pass_cpu, sf1_pass_wall)
-            ],
-            "eff_cores": [
-                round(c / w, 2)
-                for c, w in zip(sf1_pass_cpu, sf1_pass_wall)
-            ],
+            **{k: lane[k] for k in _PASS_STATS},
         }
-
-    # 100x spot lane (VERDICT r12 item 4): the lane itself runs out of
-    # band (scripts/sf10_spot.py -- corpus build plus
-    # triple-interleaved passes cost tens of minutes, far past the
-    # driver's per-round budget) and commits its run of record at
-    # bench_records/SF10_SPOT.json; every bench run embeds that record
-    # so BENCH_DETAIL and the stdout line always carry the latest
-    # measured second-decade curve.
-    sf10_rec = (Path(__file__).resolve().parent
-                / "bench_records" / "SF10_SPOT.json")
-    sf10_spot = None
-    if sf10_rec.exists():
-        sf10_spot = json.loads(sf10_rec.read_text())
-        sf10_spot["recorded"] = True
 
     full = {
         "metric": "headline_query_wall_sec",
         "value": total,
         "unit": "sec",
         "queries": timings,
-        "spread": spread,
+        "spread": head["spread"],
         "n": N_RUNS,
         "sf": sf,
         "cpu_attribution": cpu_attr,
         "filtered": filtered,
-        "conversion": {
-            "files": 8,
-            "rows": n_rel,
-            "sec": conv_sec,
-            "cold_sec": conv_cold[0],
-            "rows_per_sec": round(n_rel / conv_sec),
-            "runs_wall_cpu_spin": conv_runs,
-            "eff_cores": [round(c / w, 2) for w, c, _ in conv_runs],
-            "spin_sec": [s for _, _, s in conv_runs],
-        },
+        "conversion": conv_record(8, conv_cold, conv_runs),
         "conversion_scaleout": {
-            "files": 32,
-            "rows": n_rel,
-            "sec": conv32_sec,
-            "cold_sec": conv32_cold[0],
-            "rows_per_sec": round(n_rel / conv32_sec),
-            "runs_wall_cpu_spin": conv32_runs,
-            "eff_cores": [round(c / w, 2) for w, c, _ in conv32_runs],
-            "spin_sec": [s for _, _, s in conv32_runs],
+            **conv_record(32, conv32_cold, conv32_runs),
             "interleaved_with_8file": True,
         },
         "longtail": {"round": round_no, "queries": lt_timings},
         "sf1_spot": sf1_spot,
-        "sf10_spot": sf10_spot,
     }
 
     # The driver records only the LAST 2000 chars of stdout (every
@@ -1012,10 +876,6 @@ def main() -> None:
 _LINE_BUDGET = 1950
 
 
-def _med(xs: list[float], nd: int = 2) -> float:
-    return round(sorted(xs)[len(xs) // 2], nd) if xs else 0.0
-
-
 def compact_line(full: dict) -> str:
     """The single stdout line, guaranteed <= _LINE_BUDGET chars so the
     recorder's 2000-char tail holds it WHOLE (and parseable). Trim
@@ -1023,7 +883,6 @@ def compact_line(full: dict) -> str:
     medians -> drop per-query sf1 medians (lane summary stays). The
     contract keys (metric/value/unit/queries/sf) always survive."""
     sf1 = full.get("sf1_spot")
-    sf10 = full.get("sf10_spot")
     compact = {
         "metric": full["metric"],
         "value": full["value"],
@@ -1031,11 +890,11 @@ def compact_line(full: dict) -> str:
         "queries": dict(full["queries"]),
         "n": full["n"],
         "sf": full["sf"],
-        "eff_cores_median": _med(full["cpu_attribution"]["eff_cores"]),
+        "eff_cores_median": _true_med(full["cpu_attribution"]["eff_cores"], 2),
         # fixed spin-loop calibration median (seconds): compare across
         # rounds -- proportional inflation alongside uniform query
         # slowdown = host clock throttle, not a code regression
-        "spin_sec_median": _med(full["cpu_attribution"]["spin_sec"], 3),
+        "spin_sec_median": _true_med(full["cpu_attribution"]["spin_sec"]),
         "os_cpus": full["cpu_attribution"]["os_cpus"],
         # contamination-filtered headline (passes within spin +
         # system-busy tolerance of the cleanest -- see
@@ -1046,9 +905,9 @@ def compact_line(full: dict) -> str:
             "rows": full["conversion"]["rows"],
             "f8_rows_per_sec": full["conversion"]["rows_per_sec"],
             "f32_rows_per_sec": full["conversion_scaleout"]["rows_per_sec"],
-            "f8_eff_cores": _med(full["conversion"]["eff_cores"]),
-            "f32_eff_cores": _med(
-                full["conversion_scaleout"]["eff_cores"]),
+            "f8_eff_cores": _true_med(full["conversion"]["eff_cores"], 2),
+            "f32_eff_cores": _true_med(
+                full["conversion_scaleout"]["eff_cores"], 2),
             "interleaved": True,
         },
         "longtail": full["longtail"]["queries"],
@@ -1057,8 +916,8 @@ def compact_line(full: dict) -> str:
             "queries": dict(sf1["queries"]),
             "passes": sf1["passes"],
             "over_budget": sf1["over_budget"],
-            "eff_cores_median": _med(sf1["eff_cores"]),
-            "spin_sec_median": _med(sf1["spin_sec"], 3),
+            "eff_cores_median": _true_med(sf1["eff_cores"], 2),
+            "spin_sec_median": _true_med(sf1["spin_sec"]),
         },
         "detail": "BENCH_DETAIL.json",
     }
@@ -1069,17 +928,6 @@ def compact_line(full: dict) -> str:
     # Omitted when absent -- even a null costs line budget.
     if full["cpu_attribution"].get("cpus") is not None:
         compact["cpus"] = full["cpu_attribution"]["cpus"]
-    # second-decade curve (per-query 100x/10x ratios next to the
-    # 10x/1x ones above; "recorded" marks an embedded prior run of
-    # record rather than a fresh in-process measurement). Key omitted
-    # entirely when no record exists -- even a null costs line budget.
-    if sf10 is not None:
-        compact["sf10"] = {
-            "decade2_x": dict(sf10["decade2_x"]),
-            "compound_x": dict(sf10["compound_x"]),
-            "passes": sf10["passes"],
-            "recorded": bool(sf10.get("recorded")),
-        }
 
     def dumps() -> str:
         return json.dumps(compact, separators=(",", ":"))
@@ -1093,18 +941,8 @@ def compact_line(full: dict) -> str:
             k: round(v, 1) for k, v in compact["queries"].items()
         }
         line = dumps()
-    if len(line) > _LINE_BUDGET and compact.get("sf10"):
-        # the quotient is re-derivable from the committed
-        # SF10_SPOT.json record; decade2_x itself is the new evidence
-        compact["sf10"].pop("compound_x", None)
-        line = dumps()
     if len(line) > _LINE_BUDGET and compact.get("sf1"):
         compact["sf1"].pop("queries", None)
-        line = dumps()
-    if len(line) > _LINE_BUDGET and compact.get("sf10"):
-        # headline medians outrank the embedded record's detail: the
-        # full curve stays in SF10_SPOT.json / BENCH_DETAIL
-        compact.pop("sf10", None)
         line = dumps()
     # last resort: keep the slowest K queries and SAY how many were
     # omitted (never a silent cap) -- halve K until the line fits

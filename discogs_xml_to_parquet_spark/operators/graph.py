@@ -58,14 +58,13 @@ def connected_components_two_phase(edges: DataFrame, src: str = "src",
     which AQE's skew-join splitting handles.
 
     Returns (id, comp) = min node id of each component, identical to
-    the driver labeling (equivalence is regression-tested)."""
-    # materialize the input ONCE: nodes and e both derive from raw, and
-    # the caller's edge list may carry an arbitrarily expensive lineage
-    # (the curation capstone feeds the whole banded-LSH chain in here)
-    # -- without this checkpoint that upstream would evaluate twice
-    raw = stage_df(edges.select(
-        F.col(src).alias("a"), F.col(dst).alias("b")
-    ))
+    the driver labeling (equivalence is regression-tested).
+
+    `edges` is expected STAGED: nodes and the canonical edge set both
+    derive from it, so an unstaged input with an expensive lineage
+    would evaluate twice. Its only engine caller, connected_components,
+    passes its staged symmetric distinct edge list."""
+    raw = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     # node set from RAW edges, before the self-loop filter: a node whose
     # only edge is a self-loop must still appear in the output (as its
     # own component), matching the driver labeling

@@ -1,6 +1,6 @@
 """One-pass perf sweep over every registered query.
 
-The headline bench covers 30 queries; regressions in the other ~120
+The headline bench covers 31 queries; regressions in the other ~120
 surface only through the seeded 5-query long-tail lane -- this sweep is
 the exhaustive version, run ad hoc when hunting (r7 found and fixed 9
 stragglers with it: single-task global windows, unstaged multi-consumer
@@ -31,6 +31,7 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+from bench import force  # noqa: E402
 from discogs_xml_to_parquet_spark import registry  # noqa: E402
 from discogs_xml_to_parquet_spark.session import get_spark  # noqa: E402
 
@@ -46,15 +47,11 @@ def main() -> None:
     spark = get_spark(app_name="perf-sweep")
     spark.sparkContext.setLogLevel("ERROR")
 
-    def force(name: str) -> None:
-        registry.QUERIES[name](spark, args.sf_dir).write.format(
-            "noop").mode("overwrite").save()
-
     first: dict[str, float | str] = {}
     for name in registry.QUERIES:
         t0 = time.perf_counter()
         try:
-            force(name)
+            force(spark, name, args.sf_dir)
             first[name] = round(time.perf_counter() - t0, 2)
         except Exception as exc:  # noqa: BLE001 -- sweep must finish
             first[name] = f"ERR {str(exc)[:80]}"
@@ -69,7 +66,7 @@ def main() -> None:
         runs = []
         for _ in range(args.retime):
             t0 = time.perf_counter()
-            force(name)
+            force(spark, name, args.sf_dir)
             runs.append(time.perf_counter() - t0)
         medians[name] = round(statistics.median(runs), 2)
 

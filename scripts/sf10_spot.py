@@ -8,11 +8,9 @@ Why out of band: the corpus build (100 id-offset shards of the bench
 tables) plus triple-interleaved measured passes (each query at 100x,
 10x, and 1x back-to-back under the same conditions) cost tens of
 minutes -- far past the driver's per-round bench budget. The result
-lands at bench_records/SF10_SPOT.json; bench.py embeds that record
-into BENCH_DETAIL (`sf10_spot`, marked "recorded": true) and the
-compact stdout line (`sf10`) on every subsequent run, so the round
-artifact carries the measured second-decade curve without re-paying
-the run. Commit the record."""
+lands at bench_records/SF10_SPOT.json, the committed run of record
+for the second-decade curve; bench.py does not read it. Commit the
+record."""
 
 from __future__ import annotations
 

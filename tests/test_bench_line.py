@@ -1,11 +1,16 @@
 """bench.py's stdout contract: the line the driver records must fit
 its 2000-char tail cap WHOLE, keep the contract keys, and degrade by
 the documented trim ladder -- the r1-r8 artifacts all hold mid-line
-truncated tails because this line had silently grown past the cap."""
+truncated tails because this line had silently grown past the cap.
+Also the accounting of _timed_passes, the loop every timed lane runs,
+driven here without Spark."""
 
 from __future__ import annotations
 
 import json
+import time
+from functools import partial
+from types import SimpleNamespace
 
 from bench import _LINE_BUDGET, compact_line
 
@@ -127,45 +132,6 @@ def test_clean_pass_filter_split_minima_never_empty():
         [0.10, 0.15, 0.20], [0.50, 0.30, 0.10]) == [0]
 
 
-def _sf10_block() -> dict:
-    qs = ["q_fuzzy_blocked", "q_setsim_prefix_join",
-          "q_pagerank_bipartite", "q_stats_mad", "q_merge_upsert"]
-    return {
-        "decade1_x": {n: 3.28 for n in qs},
-        "decade2_x": {n: 4.12 for n in qs},
-        "compound_x": {n: 1.26 for n in qs},
-        "passes": 2,
-        "recorded": True,
-    }
-
-
-def test_sf10_block_rides_and_trims_before_sf1_queries():
-    """With an embedded sf10 record the line still fits; the trim
-    order sacrifices longtail and sf10's re-derivable compound_x
-    BEFORE the sf1 per-query medians, and decade2_x -- the second
-    decade's new evidence -- survives every trim short of the
-    terminal fallback."""
-    full = _full(31)
-    full["sf10_spot"] = _sf10_block()
-    line = compact_line(full)
-    assert len(line) <= _LINE_BUDGET
-    d = json.loads(line)
-    assert d["sf10"]["decade2_x"]
-    assert d["sf10"]["recorded"] is True
-    # grown shape: the whole sf10 block is sacrificed before any
-    # headline median is omitted (the record file keeps the curve)
-    full = _full(60, n_sf1=20)
-    full["sf10_spot"] = _sf10_block()
-    d = json.loads(compact_line(full))
-    assert len(d["queries"]) == 60
-    assert "queries_omitted" not in d
-
-
-def test_no_sf10_record_omits_the_key():
-    d = json.loads(compact_line(_full(31)))
-    assert "sf10" not in d
-
-
 def test_clean_pass_filter_singleton_fast_spin_keeps_the_cluster():
     """r13: the first record run measured one anomalously FAST spin
     (0.0825 s turbo window) against a uniform 0.098-0.110 cluster with
@@ -187,3 +153,72 @@ def test_clean_pass_filter_singleton_fast_spin_keeps_the_cluster():
     # other) still collapses to the single cleanest pass, not two
     assert _clean_pass_filter(
         [0.1, 0.2, 0.3], [0.1, 0.4, 0.6]) == [0]
+
+
+class _StubSpark:
+    """Just the surface _timed_passes touches: catalog.clearCache and
+    sparkContext._jvm.System.gc, both counted."""
+
+    def __init__(self):
+        self.cleared = 0
+        self.gcs = 0
+        self.catalog = SimpleNamespace(clearCache=self._clear)
+        self.sparkContext = SimpleNamespace(_jvm=SimpleNamespace(
+            System=SimpleNamespace(gc=self._gc)))
+
+    def _clear(self):
+        self.cleared += 1
+
+    def _gc(self):
+        self.gcs += 1
+
+
+def _counting_cells(calls: dict, slow_on_call: int = 0) -> list:
+    """Thunks that count their calls and take 5 ms (a pass needs a
+    nonzero wall); key "a" sleeps 0.1 s on call number
+    `slow_on_call`, so a kept sample of that call would show in its
+    spread."""
+    def thunk(key):
+        calls[key] = calls.get(key, 0) + 1
+        slow = key == "a" and calls[key] == slow_on_call
+        time.sleep(0.1 if slow else 0.005)
+    return [(k, partial(thunk, k)) for k in ("a", "b", "c")]
+
+
+def test_timed_passes_drops_a_partial_over_budget_pass(monkeypatch):
+    """Budget 0 stops the lane one cell into pass 2: that partial
+    pass is dropped whole, so every key and every per-pass list holds
+    exactly one sample -- the accounted pass."""
+    import bench
+
+    monkeypatch.setattr(bench, "_spin_calib", lambda: 0.1)
+    spark, calls = _StubSpark(), {}
+    r = bench._timed_passes(spark, _counting_cells(calls, slow_on_call=2),
+                            3, gc=True, budget_s=0)
+    assert r["passes"] == 1 and r["over_budget"] is True
+    assert calls == {"a": 2, "b": 1, "c": 1}  # pass 2 ran one cell
+    for k in ("pass_wall", "pass_cpu", "spin_sec", "busy_frac",
+              "eff_cores"):
+        assert len(r[k]) == 1, k
+    assert set(r["median"]) == set(r["spread"]) == {"a", "b", "c"}
+    # one sample per key: min == max, and the partial pass's slow "a"
+    # run is not among them
+    for lo, hi in r["spread"].values():
+        assert lo == hi
+    assert r["spread"]["a"][1] < 0.1
+    assert r["clean_passes"] == [0]
+    assert spark.cleared == 2  # once per started pass
+    assert spark.gcs == sum(calls.values())  # once per cell run
+
+
+def test_timed_passes_full_run_without_gc_or_budget(monkeypatch):
+    import bench
+
+    monkeypatch.setattr(bench, "_spin_calib", lambda: 0.1)
+    spark, calls = _StubSpark(), {}
+    r = bench._timed_passes(spark, _counting_cells(calls), 3)
+    assert r["passes"] == 3 and r["over_budget"] is False
+    assert calls == {"a": 3, "b": 3, "c": 3}
+    assert len(r["pass_wall"]) == len(r["spin_sec"]) == 3
+    assert spark.cleared == 3
+    assert spark.gcs == 0

@@ -500,3 +500,26 @@ def test_two_phase_cc_keeps_self_loop_nodes(spark, monkeypatch):
     assert _union_find_labels(pairs) == {(5, 5), (1, 1), (2, 1)}
     for path, got in _cc_paths(spark, monkeypatch, pairs).items():
         assert got == {(5, 5), (1, 1), (2, 1)}, path
+
+
+def test_above_bound_cc_stages_its_input_once(spark, monkeypatch):
+    """connected_components stages the symmetric distinct edge list
+    once and hands it to two-phase, which stages only what it derives
+    (canonical edges, then each round's aggregate and rewrite) -- never
+    the staged input again. On this 2-edge path graph: 1 entry-point
+    stage + 1 canonical edge set + deg and new_e of the one rewriting
+    round + deg of the converged probe = 5."""
+    from discogs_xml_to_parquet_spark.operators import graph as G
+
+    stage_df, calls = G.stage_df, []
+
+    def spy(df):
+        calls.append(df)
+        return stage_df(df)
+
+    monkeypatch.setattr(G, "SMALL_GRAPH_EDGES", 0)
+    monkeypatch.setattr(G, "stage_df", spy)
+    edges = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
+    got = {(r.id, r.comp) for r in G.connected_components(edges).collect()}
+    assert got == {(1, 1), (2, 1), (3, 1)}
+    assert len(calls) == 5

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import time
 
+from bench import force
 from discogs_xml_to_parquet_spark import registry
 from tests.conftest import SF_SMOKE
 
@@ -73,13 +74,12 @@ def _assert_jobs_pinned(spark, pinned):
     tracker = sc.statusTracker()
     counts = {}
     for name in pinned:
-        run = registry.QUERIES[name]
         # an uncounted first run, so table schemas are already known
-        run(spark, SF_SMOKE).write.format("noop").mode("overwrite").save()
+        force(spark, name, SF_SMOKE)
         group = f"pinned-jobs-{name}"
         sc.setJobGroup(group, name)
         try:
-            run(spark, SF_SMOKE).write.format("noop").mode("overwrite").save()
+            force(spark, name, SF_SMOKE)
         finally:
             _clear_job_group(sc)
         counts[name] = len(_settled_job_ids(tracker, group))
