@@ -337,18 +337,29 @@ def _timed_passes(spark, cells: list, passes: int, gc: bool = False,
       empty. A pass cut short is DROPPED whole (ADVICE r13): it has
       no wall/cpu row, so its samples would be unauditable by the
       clean-pass filter. Every key keeps exactly one sample per
-      accounted pass, and `passes` counts those."""
-    jvm_gc = spark.sparkContext._jvm.System.gc
+      accounted pass, and `passes` counts those.
+    - codegen_compiles: classes Janino compiled during each pass, read
+      from this JVM's CodegenMetrics counter at the pass boundaries
+      (no Spark job; in local mode the tasks compile in this JVM too).
+      A warm pass that still compiles has outgrown the session's
+      codegen cache (spark.sql.codegen.cache.maxEntries, session.py)
+      or, under AQE, finished its query stages in another order: the
+      stage id is part of a whole-stage class's name."""
+    jvm = spark.sparkContext._jvm
+    jvm_gc = jvm.System.gc
+    compiles = (jvm.org.apache.spark.metrics.source.CodegenMetrics
+                .METRIC_COMPILATION_TIME().getCount)
     runs: dict = {key: [] for key, _ in cells}
     pass_wall: list[float] = []
     pass_cpu: list[float] = []
     spin_sec: list[float] = []
+    codegen_compiles: list[int] = []
     over_budget = False
     lane_t0 = time.perf_counter()
     for _ in range(passes):
         spark.catalog.clearCache()
         spin = _spin_calib()
-        pw0, pc0 = time.perf_counter(), _cpu_busy()
+        pw0, pc0, cg0 = time.perf_counter(), _cpu_busy(), compiles()
         sample = []
         for key, thunk in cells:
             if gc:
@@ -364,6 +375,7 @@ def _timed_passes(spark, cells: list, passes: int, gc: bool = False,
             pass_wall.append(round(time.perf_counter() - pw0, 3))
             pass_cpu.append(round(_cpu_busy() - pc0, 3))
             spin_sec.append(spin)
+            codegen_compiles.append(compiles() - cg0)
             for key, t in sample:
                 runs[key].append(t)
         if over_budget:
@@ -388,6 +400,7 @@ def _timed_passes(spark, cells: list, passes: int, gc: bool = False,
         # pass whose wall inflates while eff_cores DROPS was starved by
         # the host, not slowed by the code
         "eff_cores": [round(c / w, 2) for c, w in zip(pass_cpu, pass_wall)],
+        "codegen_compiles": codegen_compiles,
     }
 
 
@@ -399,7 +412,7 @@ def _ratio(num: dict, den: dict) -> dict:
 # the per-pass accounting of a _timed_passes result, as a lane's record
 # carries it
 _PASS_STATS = ("passes", "over_budget", "pass_wall", "pass_cpu",
-               "spin_sec", "busy_frac", "eff_cores")
+               "spin_sec", "busy_frac", "eff_cores", "codegen_compiles")
 
 
 def _build_sharded_corpus(spark, src: str, dest: str, tables: dict,
@@ -562,7 +575,9 @@ def _run_sf10_lane(spark, sf_dir: str, sf: str,
         for dkey, ddir in decades:
             out_rows[dkey][name] = (
                 registry.QUERIES[name](spark, ddir).count())
-            force(spark, name, ddir)  # warm: plan + codegen at these stats
+            # warm: plan + codegen at these stats; the session's codegen
+            # cache keeps the classes (codegen_compiles shows a residue)
+            force(spark, name, ddir)
 
     r = _timed_passes(
         spark,
@@ -598,8 +613,12 @@ def main() -> None:
     spark = get_spark(app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # one warm pass: JVM/codegen/noop-datasource class loading and parquet
-    # footer caching, so timed runs measure the query plan, not startup
+    # one warm pass: JVM/noop-datasource class loading, parquet footer
+    # caching and codegen, so timed runs measure the query plan, not
+    # startup. The compiled classes outlive the pass only because
+    # session.py sizes the codegen cache above this mix's classes (483
+    # at sf0.01; at the default 100 every pass recompiled them); per-pass
+    # codegen_compiles in BENCH_DETAIL shows what a timed pass compiled.
     for name in names:
         force(spark, name, sf_dir)
 
@@ -630,17 +649,13 @@ def main() -> None:
         session_cpus = os.cpu_count()
     cpu_attr = {
         "cpus": session_cpus,
-        "pass_wall": head["pass_wall"],
-        "pass_cpu": head["pass_cpu"],
-        "eff_cores": head["eff_cores"],
-        # fixed-workload clock calibration per pass: uniform query
-        # slowdown + proportional spin_sec inflation = host throttle;
-        # stable spin_sec + slower queries = real regression
-        "spin_sec": head["spin_sec"],
-        # system-wide busy fraction per pass (VERDICT r11 item 6):
-        # the bench's own work is constant across passes, so a pass
-        # whose fraction jumps was sharing the box with a co-tenant
-        "busy_frac": head["busy_frac"],
+        # per-pass accounting, as every lane carries it. spin_sec is a
+        # fixed-workload clock calibration (uniform query slowdown +
+        # proportional spin_sec inflation = host throttle; stable
+        # spin_sec + slower queries = real regression); busy_frac is
+        # system-wide (VERDICT r11 item 6: a pass whose fraction jumps
+        # was sharing the box with a co-tenant)
+        **{k: head[k] for k in _PASS_STATS},
         "os_cpus": os.cpu_count(),
     }
     # contamination-filtered headline NEXT TO the raw one (VERDICT r11
@@ -676,8 +691,9 @@ def main() -> None:
         f"{tempfile.gettempdir()}/discogs_bench_{n_rel}", n_rel, n_files=8
     )
     out = f"{tempfile.gettempdir()}/discogs_bench_out"
-    # warm on a tiny corpus (XML source class load, codegen): pays the
-    # fixed startup without running the full 1M-row conversion twice
+    # warm on a tiny corpus (XML source class load, codegen into the
+    # session's codegen cache): pays the fixed startup without running
+    # the full 1M-row conversion twice
     warm_dir = write_synthetic_releases(
         f"{tempfile.gettempdir()}/discogs_bench_warm", 2_000, n_files=8
     )
@@ -745,7 +761,7 @@ def main() -> None:
     pool = sorted(n for n in registry.QUERIES if n not in set(names))
     longtail = random.Random(round_no).sample(pool, min(5, len(pool)))
     for name in longtail:
-        force(spark, name, sf_dir)  # warm: plan + codegen
+        force(spark, name, sf_dir)  # warm: plan + cached codegen
     lt_timings = _timed_passes(
         spark, [(n, partial(force, spark, n, sf_dir)) for n in longtail],
         3)["median"]
@@ -778,7 +794,7 @@ def main() -> None:
         for name in SF1_QUERIES:
             out_rows[name] = registry.QUERIES[name](spark, sf1_dir).count()
             out_rows_01[name] = registry.QUERIES[name](spark, sf_dir).count()
-            force(spark, name, sf1_dir)  # warm: plan + codegen at new stats
+            force(spark, name, sf1_dir)  # warm: cached codegen at new stats
             force(spark, name, sf_dir)   # warm the headline-SF twin too
         # Each pass runs every query at sf1 IMMEDIATELY FOLLOWED by
         # its headline-SF twin (r12): the 10x ratio is the lane's

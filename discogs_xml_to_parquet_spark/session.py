@@ -10,6 +10,14 @@ and merely *also* work on local[N]:
   (region/nation/customer-sized) must never shuffle the fact table.
 - Arrow enabled: every Python-boundary crossing (pandas UDFs, toPandas)
   is Arrow-batched, never row-at-a-time pickling.
+- Codegen cache sized to the engine's working set: a long-lived session
+  reuses its compiled classes instead of recompiling them every pass.
+  Measured distinct classes per pass: 131 (perfbench headline mix),
+  483 (bench.py's 31-query headline), 2,541 (the whole registry). A
+  second registry pass still compiled 44: AQE numbers whole-stage
+  classes in the order its query stages finish, so a query whose
+  stages can finish in another order compiles a renamed twin of a
+  cached class (CHANGES.md names the queries).
 """
 
 from __future__ import annotations
@@ -59,5 +67,15 @@ def get_spark(app_name: str = "discogs-xml-to-parquet-spark",
         # inside cached plans, which staged frames don't want anyway.
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
                 "false")
+        # Compiled whole-stage / projection classes live in an LRU keyed
+        # by generated source; the default bound (100) is below one pass
+        # of any real mix, so every pass evicted what it needed next and
+        # recompiled all of it. Measured distinct classes per pass: the
+        # perfbench headline mix (4 queries) 131, bench.py's 31-query
+        # headline (sf0.01) 483, the whole registry (sf0.001) 2,541.
+        # 4096 holds the registry with 1.6x headroom; full, it cost 63 MB
+        # more heap after GC (219 vs 156 MB after one registry pass).
+        # Static conf: it must be set before the first session starts.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     return builder.getOrCreate()

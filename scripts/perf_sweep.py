@@ -13,10 +13,12 @@ Usage:
 
 Pass 1 times every query once (cold-ish). Anything over --threshold
 seconds is then warm-retimed (--retime runs, median) to strip plan /
-codegen / Python-worker-pool startup out of the number. Prints one JSON
-object; single runs on this box swing 2-20x (see bench.py), so treat
-pass-1 numbers as a screen, the retime medians as the signal, and
-A/B any fix interleaved in ONE session.
+Python-worker-pool startup out of the number; pass 1's compiled classes
+stay in the session's codegen cache (session.py sizes it above the
+registry's ~2.5k classes), so a retime recompiles almost nothing.
+Prints one JSON object; single runs on a shared host swing 2-20x (see
+bench.py), so treat pass-1 numbers as a screen, the retime medians as
+the signal, and A/B any fix interleaved in ONE session.
 """
 
 from __future__ import annotations

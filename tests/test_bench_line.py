@@ -157,14 +157,22 @@ def test_clean_pass_filter_singleton_fast_spin_keeps_the_cluster():
 
 class _StubSpark:
     """Just the surface _timed_passes touches: catalog.clearCache and
-    sparkContext._jvm.System.gc, both counted."""
+    sparkContext._jvm.System.gc, both counted, and the JVM's codegen
+    compile counter, which reads `compiled`."""
 
     def __init__(self):
         self.cleared = 0
         self.gcs = 0
+        self.compiled = 0
         self.catalog = SimpleNamespace(clearCache=self._clear)
+        histogram = SimpleNamespace(getCount=lambda: self.compiled)
+        metrics = SimpleNamespace(CodegenMetrics=SimpleNamespace(
+            METRIC_COMPILATION_TIME=lambda: histogram))
         self.sparkContext = SimpleNamespace(_jvm=SimpleNamespace(
-            System=SimpleNamespace(gc=self._gc)))
+            System=SimpleNamespace(gc=self._gc),
+            org=SimpleNamespace(apache=SimpleNamespace(
+                spark=SimpleNamespace(metrics=SimpleNamespace(
+                    source=metrics))))))
 
     def _clear(self):
         self.cleared += 1
@@ -173,13 +181,18 @@ class _StubSpark:
         self.gcs += 1
 
 
-def _counting_cells(calls: dict, slow_on_call: int = 0) -> list:
+def _counting_cells(calls: dict, slow_on_call: int = 0,
+                    spark: _StubSpark | None = None) -> list:
     """Thunks that count their calls and take 5 ms (a pass needs a
     nonzero wall); key "a" sleeps 0.1 s on call number
     `slow_on_call`, so a kept sample of that call would show in its
-    spread."""
+    spread. With `spark`, each key compiles like a cold-then-warm
+    query: "a" 3 classes and "b" 2 on their first call, "c" 1 on
+    every call (a per-run literal in its generated source)."""
     def thunk(key):
         calls[key] = calls.get(key, 0) + 1
+        if spark is not None and (key == "c" or calls[key] == 1):
+            spark.compiled += {"a": 3, "b": 2, "c": 1}[key]
         slow = key == "a" and calls[key] == slow_on_call
         time.sleep(0.1 if slow else 0.005)
     return [(k, partial(thunk, k)) for k in ("a", "b", "c")]
@@ -193,13 +206,15 @@ def test_timed_passes_drops_a_partial_over_budget_pass(monkeypatch):
 
     monkeypatch.setattr(bench, "_spin_calib", lambda: 0.1)
     spark, calls = _StubSpark(), {}
-    r = bench._timed_passes(spark, _counting_cells(calls, slow_on_call=2),
-                            3, gc=True, budget_s=0)
+    r = bench._timed_passes(
+        spark, _counting_cells(calls, slow_on_call=2, spark=spark), 3,
+        gc=True, budget_s=0)
     assert r["passes"] == 1 and r["over_budget"] is True
     assert calls == {"a": 2, "b": 1, "c": 1}  # pass 2 ran one cell
     for k in ("pass_wall", "pass_cpu", "spin_sec", "busy_frac",
-              "eff_cores"):
+              "eff_cores", "codegen_compiles"):
         assert len(r[k]) == 1, k
+    assert r["codegen_compiles"] == [6]
     assert set(r["median"]) == set(r["spread"]) == {"a", "b", "c"}
     # one sample per key: min == max, and the partial pass's slow "a"
     # run is not among them
@@ -216,9 +231,11 @@ def test_timed_passes_full_run_without_gc_or_budget(monkeypatch):
 
     monkeypatch.setattr(bench, "_spin_calib", lambda: 0.1)
     spark, calls = _StubSpark(), {}
-    r = bench._timed_passes(spark, _counting_cells(calls), 3)
+    spark.compiled = 1000  # the counter is JVM-wide: read as deltas
+    r = bench._timed_passes(spark, _counting_cells(calls, spark=spark), 3)
     assert r["passes"] == 3 and r["over_budget"] is False
     assert calls == {"a": 3, "b": 3, "c": 3}
     assert len(r["pass_wall"]) == len(r["spin_sec"]) == 3
+    assert r["codegen_compiles"] == [6, 1, 1]
     assert spark.cleared == 3
     assert spark.gcs == 0
