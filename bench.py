@@ -894,10 +894,12 @@ _LINE_BUDGET = 1950
 
 def compact_line(full: dict) -> str:
     """The single stdout line, guaranteed <= _LINE_BUDGET chars so the
-    recorder's 2000-char tail holds it WHOLE (and parseable). Trim
-    ladder, ballast before precision: drop longtail -> 1-dp query
-    medians -> drop per-query sf1 medians (lane summary stays). The
-    contract keys (metric/value/unit/queries/sf) always survive."""
+    recorder's 2000-char tail holds it WHOLE (and parseable). The
+    longtail lane stays in BENCH_DETAIL only: beside 31 headline and
+    19 sf1 medians it never fit. Trim ladder, ballast before
+    precision: 1-dp query medians -> drop per-query sf1 medians (lane
+    summary stays). The contract keys (metric/value/unit/queries/sf)
+    always survive."""
     sf1 = full.get("sf1_spot")
     compact = {
         "metric": full["metric"],
@@ -926,7 +928,6 @@ def compact_line(full: dict) -> str:
                 full["conversion_scaleout"]["eff_cores"], 2),
             "interleaved": True,
         },
-        "longtail": full["longtail"]["queries"],
         "sf1": None if sf1 is None else {
             "sf": sf1["sf"],
             "queries": dict(sf1["queries"]),
@@ -950,9 +951,6 @@ def compact_line(full: dict) -> str:
 
     line = dumps()
     if len(line) > _LINE_BUDGET:  # trim ballast before precision
-        compact.pop("longtail", None)
-        line = dumps()
-    if len(line) > _LINE_BUDGET:
         compact["queries"] = {
             k: round(v, 1) for k, v in compact["queries"].items()
         }

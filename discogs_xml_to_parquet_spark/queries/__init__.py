@@ -20,9 +20,9 @@ Round-16 window (the first 50), derived by window(changed=CHANGED in
 tests/test_window.py, pin=(), max_round=15). The design intent:
 re-green every query whose code changed since its last green row --
 the three connected-components consumers moved onto the size-
-dispatched operators/graph.py entry point, and the tables.load_spread
-users now spread to defaultParallelism -- then spend the rest on the
-r9-evidence cohort, the oldest evidence in the repo.
+dispatched operators/graph.py entry point, the tables.load_spread
+users now spread to defaultParallelism, and the table-format queries
+now commit through tablefmt.py -- in registration order among equals:
 
 - 1-6: matching CHANGED (q_entity_resolution's CC stage);
 - 7-17: dedup CHANGED (q_dedup_components + q_curation_keep_best's
@@ -35,13 +35,14 @@ r9-evidence cohort, the oldest evidence in the repo.
 - 28-34: text_analysis (q_text_fingerprint spreads);
 - 35-42: the r10-evidence spread users with their module siblings --
   quality_model, multimodal_audio, decontam, scoring;
-- 43-50: the r9-evidence cohort on evidence age -- windows,
-  subqueries, and the cut lands INSIDE semistructured (q_json_struct
-  waits for the next round).
+- 43-50: the table-format queries -- merge, streaming_merge with its
+  streaming_restart dep, deletion_vectors.
 
-After this window the r9-evidence set shrinks to 15 (q_json_struct,
-relational, scalars, similarity -- first in line next round). The
-staging helpers the staged lanes share live in ../staging.py, OUTSIDE
+The CHANGED set (53 queries with module siblings and deps) overflows
+the 50: ttl, then snapshot_read with its lakehouse dep, wait just past
+the cut, ahead of the r9-evidence cohort (windows, subqueries,
+semistructured, relational, scalars, similarity). The helpers the
+staged lanes share live in ../staging.py and ../tablefmt.py, OUTSIDE
 this package, so importing them cannot drag a query module forward in
 the window.
 """
@@ -66,13 +67,22 @@ from discogs_xml_to_parquet_spark.queries import (  # noqa: F401
     multimodal_audio,
     decontam,
     scoring,
-    # 43-50: the r9-evidence cohort on evidence age; the 50-cut lands
-    # at semistructured's first query
+    # 43-50: the table-format queries CHANGED (commit via tablefmt);
+    # streaming_restart is streaming_merge's import dep
+    merge,
+    streaming_restart,
+    streaming_merge,
+    deletion_vectors,
+    # --- 50-query window cut ---
+    # CHANGED past the cut: first in line next round (lakehouse is
+    # snapshot_read's import dep)
+    ttl,
+    lakehouse,
+    snapshot_read,
+    # the r9-evidence cohort on evidence age
     windows,
     subqueries,
     semistructured,
-    # --- 50-query window cut ---
-    # r9-green remainder: first in line next round
     relational,
     scalars,
     similarity,
@@ -107,18 +117,11 @@ from discogs_xml_to_parquet_spark.queries import (  # noqa: F401,E402
     quantile_rollup,
     kll_quantiles,
     partition_evolution,
-    streaming_restart,
-    # merge rides here on the dependency fold (streaming_merge,
-    # deletion_vectors and incremental all import it) -- its own
-    # evidence is fresh r13
-    merge,
-    streaming_merge,
     python_datasource,
     tpch_extra,
     aggregates,
     formats,
     # r12-green
-    deletion_vectors,
     theta_sets,
     bucket_pruning,
     analytics_extra,
@@ -134,7 +137,6 @@ from discogs_xml_to_parquet_spark.queries import (  # noqa: F401,E402
     tokenize,
     file_skipping,
     incremental,
-    ttl,
     streaming_queries,
     sketches,
     tpch_extra2,
@@ -144,8 +146,6 @@ from discogs_xml_to_parquet_spark.queries import (  # noqa: F401,E402
     setops,
     temporal,
     # r15-green (freshest evidence, rotated out of the window)
-    lakehouse,
-    snapshot_read,
     setsim,
     graph_iter,
     runtime_filters,

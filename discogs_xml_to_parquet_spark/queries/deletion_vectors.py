@@ -45,34 +45,20 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from discogs_xml_to_parquet_spark import tablefmt
 from discogs_xml_to_parquet_spark.functions.exact import dsum, rev_sql
-from discogs_xml_to_parquet_spark.queries.merge import (
-    staged_partitioned_orders,
-)
 from discogs_xml_to_parquet_spark.registry import query
 from discogs_xml_to_parquet_spark.staging import work_dir as _work_dir
+from discogs_xml_to_parquet_spark.tablefmt import (
+    _stat_inventory,
+    staged_partitioned_orders,
+)
 
 _DEL_MOD = 17   # delete keys: o_orderkey % 17 == 0 -- scattered, every
                 # month holds some: copy-on-write's worst case
 _PDEL_MOD = 13  # the positional lane's predicate -- distinct modulus,
                 # so neither lane can satisfy the other's oracle
-
-
-def _stat_inventory(root: str) -> dict[str, tuple[int, int]]:
-    """Visible data files under `root` -> (size, mtime_ns): the cheap
-    stat-only untouched check for the in-row fact. ADVICE r11: the
-    md5 inventory (merge._inventory) reads every base byte, twice per
-    run, in a lane whose pitch is O(delta) write cost -- and
-    q_delete_merge_on_read is in bench.py's sf1 lane. BYTE-level
-    identity stays pinned where it belongs: the pytest
-    (test_delete_leaves_base_byte_identical) still runs the full md5
-    pass once; the driver row's boolean needs only 'no file was
-    rewritten, resized, or removed', which stat proves without I/O."""
-    return {
-        str(p.relative_to(root)): (p.stat().st_size, p.stat().st_mtime_ns)
-        for p in sorted(Path(root).rglob("*"))
-        if p.is_file() and not p.name.startswith(("_", "."))
-    }
+_PART = ["o_month"]
 
 
 def delete_keys(spark: SparkSession, base: str) -> DataFrame:
@@ -135,33 +121,31 @@ def mor_read(spark: SparkSession, base: str, dv_dir: str) -> DataFrame:
 def apply_deletion_vectors(spark: SparkSession, base: str,
                            dv_dir: str) -> list[str]:
     """MOR -> COW compaction: fold the sidecars into data files by
-    rewriting the affected partitions (the merge.py swap discipline)
-    and dropping their DVs. After this, a plain scan with no merge tax
+    swapping the affected partitions (tablefmt.swap_partitions) and
+    dropping their DVs. After this, a plain scan with no merge tax
     equals the MOR read -- pinned in tests. Returns rewritten months.
 
     Production would trigger this per partition when its deleted
     fraction crosses a threshold; here every DV'd partition compacts,
     the threshold=0 case."""
-    months = sorted(
-        d.name for d in Path(dv_dir).glob("o_month=*") if d.is_dir())
+    return _compact(base, dv_dir, mor_read(spark, base, dv_dir))
+
+
+def _compact(base: str, sidecar_dir: str, live: DataFrame) -> list[str]:
+    """Fold one sidecar form into data files: swap every partition
+    holding a sidecar for its rewrite from the `live` MOR read (a
+    delete may empty a partition, which the swap then drops), then
+    drop those sidecars. Returns the rewritten months."""
+    months = tablefmt.partitions(sidecar_dir, _PART)
     if not months:
         return []
-    live = mor_read(spark, base, dv_dir).filter(
-        F.col("o_month").isin([m.split("=", 1)[1] for m in months]))
-    import tempfile
-
-    newver = tempfile.mkdtemp(prefix="spark_graft_dv_compact_")
-    live.write.mode("overwrite").partitionBy("o_month").parquet(newver)
+    tablefmt.swap_partitions(
+        base,
+        live.filter(F.col("o_month").isin(
+            [m.split("=", 1)[1] for m in months])),
+        _PART, listed=months)
     for m in months:
-        dst = Path(base) / m
-        src = Path(newver) / m
-        if dst.exists():
-            shutil.rmtree(dst)
-        # a delete may empty a partition entirely: drop, don't move
-        if src.exists():
-            shutil.move(str(src), str(dst))
-        shutil.rmtree(Path(dv_dir) / m, ignore_errors=True)
-    shutil.rmtree(newver, ignore_errors=True)
+        shutil.rmtree(Path(sidecar_dir) / m, ignore_errors=True)
     return months
 
 
@@ -245,26 +229,7 @@ def apply_positional_dvs(spark: SparkSession, base: str,
     affected partitions from the positional read and drop their
     delete files -- after it, a plain scan equals the MOR read
     (pytest-pinned), mirroring apply_deletion_vectors."""
-    months = sorted(
-        d.name for d in Path(pdv_dir).glob("o_month=*") if d.is_dir())
-    if not months:
-        return []
-    live = positional_read(spark, base, pdv_dir).filter(
-        F.col("o_month").isin([m.split("=", 1)[1] for m in months]))
-    import tempfile
-
-    newver = tempfile.mkdtemp(prefix="spark_graft_pdv_compact_")
-    live.write.mode("overwrite").partitionBy("o_month").parquet(newver)
-    for m in months:
-        dst = Path(base) / m
-        src = Path(newver) / m
-        if dst.exists():
-            shutil.rmtree(dst)
-        if src.exists():
-            shutil.move(str(src), str(dst))
-        shutil.rmtree(Path(pdv_dir) / m, ignore_errors=True)
-    shutil.rmtree(newver, ignore_errors=True)
-    return months
+    return _compact(base, pdv_dir, positional_read(spark, base, pdv_dir))
 
 
 _REV_SQL = rev_sql("o_totalprice")

@@ -54,15 +54,13 @@ from discogs_xml_to_parquet_spark.functions.exact import (
     scaled,
     unscale,
 )
-from discogs_xml_to_parquet_spark.queries.merge import (
-    staged_partitioned_orders,
-)
 from discogs_xml_to_parquet_spark.registry import query
 from discogs_xml_to_parquet_spark.staging import (
     source_fingerprint as _source_fingerprint,
     stage_df,
     staged as _staged,
 )
+from discogs_xml_to_parquet_spark.tablefmt import staged_partitioned_orders
 from discogs_xml_to_parquet_spark.tables import load
 
 _SUM_SQL = ("CAST(SUM(CAST(floor((value) * 1000000 + 0.5) AS BIGINT)) "

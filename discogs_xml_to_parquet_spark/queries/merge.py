@@ -13,11 +13,10 @@ must NOT rewrite the table; it must
   2. anti-join the survivors against the delta keys with the delta
      BROADCAST (a MERGE delta is update-batch-sized, never
      fact-sized),
-  3. write the merged partitions as NEW files and commit by an atomic
-     partition swap (the manifest/pointer flip of a real table
-     format, spelled as directory renames on a filesystem) -- rows in
-     untouched partitions are never read, never rewritten, and their
-     files stay byte-identical.
+  3. write the merged partitions as NEW files and commit by
+     tablefmt's in-place partition swap (directory renames) -- rows
+     in untouched partitions are never read, never rewritten, and
+     their files stay byte-identical.
 
 Both halves of the contract ride in the driver row: the relational
 oracle reconstructs the merged table from `orders` in pure SQL (so a
@@ -53,20 +52,20 @@ byte ratios are the whole cost model.
 
 from __future__ import annotations
 
-import hashlib
 import shutil
-import tempfile
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from discogs_xml_to_parquet_spark import tablefmt
 from discogs_xml_to_parquet_spark.functions.exact import dsum, rev_sql
 from discogs_xml_to_parquet_spark.registry import query
-from discogs_xml_to_parquet_spark.staging import (
-    source_fingerprint as _source_fingerprint,
-    staged as _staged,
-    work_dir as _work_dir,
+from discogs_xml_to_parquet_spark.staging import work_dir as _work_dir
+from discogs_xml_to_parquet_spark.tablefmt import (
+    _inventory,
+    _link_or_copy,
+    staged_partitioned_orders,
 )
 from discogs_xml_to_parquet_spark.tables import load
 
@@ -82,27 +81,8 @@ _WIN_LO, _WIN_HI = "1995-01-01", "1995-07-01"   # delta backfill window
 _MONTH_LO, _MONTH_HI = "1995-01", "1995-06"     # its partition range
 _COLS = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
          "o_orderdate", "o_orderpriority", "o_month"]
-_VERSION = 1
+_PART = ["o_month"]
 _REV = rev_sql("o_totalprice")   # the shared oracle-side dsum mirror
-
-
-def staged_partitioned_orders(spark: SparkSession, sf_dir: str) -> str:
-    """orders as an o_month-partitioned tree (the base table a MERGE
-    targets). Built once per container per (sf_dir, fingerprint),
-    atomic publish."""
-    slug = sf_dir.strip("/").replace("/", "_")
-    fp = _source_fingerprint(sf_dir, "orders.parquet")
-    return _staged(
-        f"spark_graft_merge_base_v{_VERSION}_{slug}_{fp}",
-        lambda tmp: (
-            load(spark, sf_dir, "orders")
-            .withColumn("o_month",
-                        F.date_format("o_orderdate", "yyyy-MM"))
-            .write.mode("overwrite")
-            .partitionBy("o_month")
-            .parquet(tmp)
-        ),
-    )
 
 
 def delta_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -140,35 +120,6 @@ def delta_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_month", F.date_format("o_orderdate", "yyyy-MM"))
 
 
-def _link_or_copy(src: str, dst: str) -> None:
-    """Hardlink when possible, byte-copy across filesystems (ADVICE
-    r12: os.link raises EXDEV if SPARK_LOCAL_DIRS/tmpdir overrides
-    land the staged base and the scratch on different mounts; both
-    sit under tempfile.gettempdir() today, so the link path is the
-    one actually taken). Shared by every lane that clones its staged
-    base for harness isolation (TTL since r12; MERGE since the r14
-    optimization round)."""
-    import os
-
-    try:
-        os.link(src, dst)
-    except OSError:
-        shutil.copy2(src, dst)
-
-
-def _inventory(root: str) -> dict[str, tuple[int, str]]:
-    """Visible data files under `root` -> (size, md5). Hidden
-    sidecars (.crc, _SUCCESS) excluded: the contract is about data
-    files, the things a table format's manifest points at."""
-    out: dict[str, tuple[int, str]] = {}
-    for p in sorted(Path(root).rglob("*")):
-        if not p.is_file() or p.name.startswith(("_", ".")):
-            continue
-        out[str(p.relative_to(root))] = (
-            p.stat().st_size, hashlib.md5(p.read_bytes()).hexdigest())
-    return out
-
-
 def affected_read(spark: SparkSession, scratch: str) -> DataFrame:
     """The pruned base read: only the delta's partition range. The
     month predicate is on the PARTITION column, so the scan carries
@@ -198,9 +149,8 @@ def merged_affected(window_read: DataFrame,
 def merge_upsert(spark: SparkSession, scratch: str,
                  delta: DataFrame) -> list[str]:
     """Execute the copy-on-write MERGE against the table at `scratch`
-    in place: write merged affected partitions as new files under a
-    temp version dir, then commit by swapping those partition dirs.
-    Returns the list of swapped partition dir names.
+    in place (tablefmt.swap_partitions). Returns the list of swapped
+    partition dir names.
 
     The rewrite set is DELTA-DRIVEN: the statically-pruned window
     read is further restricted (broadcast semi join) to the months
@@ -210,35 +160,23 @@ def merge_upsert(spark: SparkSession, scratch: str,
     pruning a real MERGE runs: coarse static range from the job spec,
     exact partition set from the delta's own stats."""
     merged = merged_affected(affected_read(spark, scratch), delta)
-    newver = tempfile.mkdtemp(prefix="spark_graft_merge_newver_")
-    merged.write.mode("overwrite").partitionBy("o_month").parquet(newver)
-    months = sorted(
-        d.name for d in Path(newver).glob("o_month=*") if d.is_dir())
-    _check_months_in_window(months, newver)
-    for m in months:  # the "manifest flip": driver-side renames only
-        dst = Path(scratch) / m
-        if dst.exists():
-            shutil.rmtree(dst)
-        shutil.move(str(Path(newver) / m), str(dst))
-    shutil.rmtree(newver, ignore_errors=True)
-    return months
+    return tablefmt.swap_partitions(scratch, merged, _PART,
+                                    check=_check_months_in_window)
 
 
 def _month_of(relpath: str) -> str:
     return relpath.split("/", 1)[0]
 
 
-def _check_months_in_window(months: list[str], newver: str) -> None:
+def _check_months_in_window(months: list[str]) -> None:
     """Abort (before anything is swapped or published) if the merged
     write produced a partition OUTSIDE affected_read's static window:
     such a partition holds ONLY delta rows -- its pre-existing base
     rows were pruned away, so committing it would silently destroy
-    them (ADVICE r10). The new version dir is removed, so the failed
-    merge leaves the table byte-identical."""
+    them (ADVICE r10)."""
     bad = [m for m in months
            if not (_MONTH_LO <= m.split("=", 1)[1] <= _MONTH_HI)]
     if bad:
-        shutil.rmtree(newver, ignore_errors=True)
         raise ValueError(
             f"merge delta touches months {bad} outside the pruned read "
             f"window [{_MONTH_LO}, {_MONTH_HI}]; committing would drop "
@@ -251,14 +189,8 @@ def run_merge(spark: SparkSession, sf_dir: str) -> tuple[str, dict]:
     file inventory. Returns (scratch dir, layout facts)."""
     base = staged_partitioned_orders(spark, sf_dir)
     scratch = _work_dir("merge_scratch", sf_dir)
-    # hardlink clone (r14 optimization round, same rationale as TTL's
-    # r12 move): the scratch copy is HARNESS isolation, not part of
-    # the COW-merge cost model -- a byte copy billed O(table) I/O to a
-    # lane whose claim is O(affected)+O(delta) (measured 0.74 s of the
-    # sf1 wall). The merge never modifies file content in place
-    # (affected dirs are rmtree'd and REPLACED with new files; the
-    # inventory only reads), so the shared base's inodes stay
-    # untouched -- pinned by the untouched_preserved boolean itself.
+    # hardlink clone (0.74 s of the sf1 wall as a byte copy); the
+    # untouched_preserved boolean pins that the base's inodes survive
     shutil.copytree(base, scratch, copy_function=_link_or_copy)
     before = _inventory(scratch)
     months = merge_upsert(spark, scratch, delta_frame(spark, sf_dir))
@@ -359,14 +291,11 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- time travel: versioned manifests over the same COW merge --------
 
 def versioned_merge(spark: SparkSession, sf_dir: str) -> tuple[str, dict]:
-    """The MERGE as a real table format runs it: version v0 is a
-    MANIFEST (a directory of per-partition pointers -- symlinks here,
-    manifest entries in Delta/Iceberg) over the staged base's files;
-    the merge writes its affected partitions as NEW directories and
-    publishes version v1 as a second manifest that points at the new
-    dirs for affected months and at THE SAME underlying dirs as v0
-    for everything else. Readers resolve the `_current` pointer file
-    (flipped atomically: write-temp + rename); old readers keep v0.
+    """The MERGE as a real table format runs it (the versioned layout
+    of tablefmt): v0 is a manifest of pointers over the staged base,
+    and the merge publishes v1, which holds NEW dirs for the affected
+    months and points at THE SAME dirs as v0 for everything else;
+    `_current` flips to v1 while old readers keep v0.
 
     What this buys at 100 TB: storage for a new version is O(affected
     bytes) (`n_shared` months cost nothing -- pinned by symlink
@@ -375,46 +304,23 @@ def versioned_merge(spark: SparkSession, sf_dir: str) -> tuple[str, dict]:
     readable table. Returns (table root, facts)."""
     base = staged_partitioned_orders(spark, sf_dir)
     table = Path(_work_dir("ttable", sf_dir))
-    table.mkdir()
-    months = sorted(p.name for p in Path(base).glob("o_month=*")
-                    if p.is_dir())
+    tablefmt.init_version(table, base, _PART)
     v0 = table / "v0"
-    v0.mkdir()
-    for m in months:
-        (v0 / m).symlink_to(Path(base) / m)
-
-    delta = delta_frame(spark, sf_dir)
-    merged = merged_affected(affected_read(spark, str(v0)), delta)
-    newver = tempfile.mkdtemp(prefix="spark_graft_ttable_new_")
-    merged.write.mode("overwrite").partitionBy("o_month").parquet(newver)
-    rewritten = sorted(
-        d.name for d in Path(newver).glob("o_month=*") if d.is_dir())
-
-    v1 = table / "v1"
-    v1.mkdir()
-    for m in rewritten:
-        shutil.move(str(Path(newver) / m), str(v1 / m))
-    for m in months:
-        if m not in rewritten:
-            (v1 / m).symlink_to((v0 / m).resolve())
-    shutil.rmtree(newver, ignore_errors=True)
-    # atomic publish: readers see either the old or the new pointer
-    ptr_tmp = table / "_current.tmp"
-    ptr_tmp.write_text("v1")
-    ptr_tmp.rename(table / "_current")
-
-    shared = [m for m in months if m not in rewritten]
+    merged = merged_affected(affected_read(spark, str(v0)),
+                             delta_frame(spark, sf_dir))
+    v1 = table / tablefmt.publish_version(table, merged, _PART)
+    months = tablefmt.partitions(v0, _PART)
+    shared = [m for m in months if (v1 / m).is_symlink()]
     facts = {
-        "rewritten": rewritten,
+        "rewritten": [m for m in months if m not in shared],
         "n_shared": len(shared),
         # storage sharing: every untouched month in v1 resolves to the
         # exact directory v0 reads -- zero new bytes for those months
         "storage_shared": all(
             (v1 / m).resolve() == (v0 / m).resolve() for m in shared),
         # snapshot isolation: v0 still lists every month as before
-        "v0_intact": sorted(
-            p.name for p in v0.glob("o_month=*")) == months,
-        "current": (table / "_current").read_text(),
+        "v0_intact": months == tablefmt.partitions(base, _PART),
+        "current": tablefmt.current_version(table),
     }
     return str(table), facts
 
@@ -622,27 +528,10 @@ def publish_next_version(spark: SparkSession, table: str,
     v0->v1 step of versioned_merge to any chain length -- each
     generation costs O(its affected months), and every historical
     version stays a complete readable table until vacuumed."""
-    t = Path(table)
-    prev = (t / "_current").read_text()
-    n = int(prev[1:]) + 1
-    cur = f"v{n}"
-    merged = merged_affected(affected_read(spark, str(t / prev)), delta)
-    newver = tempfile.mkdtemp(prefix="spark_graft_ttable_next_")
-    merged.write.mode("overwrite").partitionBy("o_month").parquet(newver)
-    rewritten = sorted(
-        d.name for d in Path(newver).glob("o_month=*") if d.is_dir())
-    _check_months_in_window(rewritten, newver)
-    (t / cur).mkdir()
-    for m in rewritten:
-        shutil.move(str(Path(newver) / m), str(t / cur / m))
-    for d in sorted((t / prev).glob("o_month=*")):
-        if d.name not in rewritten:
-            (t / cur / d.name).symlink_to(d.resolve())
-    shutil.rmtree(newver, ignore_errors=True)
-    ptr = t / "_current.tmp"
-    ptr.write_text(cur)
-    ptr.rename(t / "_current")
-    return cur
+    prev = Path(table) / tablefmt.current_version(table)
+    merged = merged_affected(affected_read(spark, str(prev)), delta)
+    return tablefmt.publish_version(table, merged, _PART,
+                                    check=_check_months_in_window)
 
 
 def delta2_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -841,7 +730,7 @@ def vacuum(table: str, keep: list[str]) -> dict:
         raise ValueError(
             f"vacuum keep names non-existent versions {missing}; "
             f"existing: {versions}")
-    current = (t / "_current").read_text()
+    current = tablefmt.current_version(t)
     if current not in keep:
         raise ValueError(
             f"vacuum must keep the current version {current!r} "

@@ -1,6 +1,7 @@
 """Driver row for the Python DataSource conversion lane
-(sources/discogs_datasource.py): the fourth way into the Discogs
-corpus, as a registerable `format("discogs_releases")` connector.
+(sources/discogs_datasource.py): the strict lane's read path into
+the Discogs corpus, as a registerable `format("discogs_releases")`
+connector.
 
 Same fixture corpus and the same generator-derived expected parquet
 as the conversion trio (queries/conversion.py), so the driver
@@ -67,7 +68,7 @@ def q_source_python_datasource(spark: SparkSession,
     the same deterministic 153-row result as discogs_xml_conversion,
     hash-compared against the same generator-derived expected parquet,
     but ingested through the Spark 4 Python DataSource API instead of
-    the native XML source: conformance of the fourth lane."""
+    the native XML source: conformance of the strict lane."""
     df = read_via_datasource(spark)
     return df.select(
         "id",

@@ -8,9 +8,9 @@ deletion vectors with a broadcast LeftAnti that never shuffles the
 base.
 
 The repo's single-mechanism lanes each prove one layer alone --
-q_time_travel the versioned manifests (queries/merge.py:337),
-q_delete_positional_dv the (file, row position) sidecars
-(queries/deletion_vectors.py:180), q_lakehouse_read_path the
+q_time_travel the versioned manifests (the layout tablefmt.py
+owns), q_delete_positional_dv the (file, row position) sidecars
+(queries/deletion_vectors.py), q_lakehouse_read_path the
 three-gate planned read (queries/lakehouse.py:178). This lane is
 their composition, which is the ONLY form a production reader ever
 executes: a snapshot is a manifest, the manifest is pruned to a file
@@ -51,14 +51,13 @@ the one base staging every lane shares.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
 from functools import reduce
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from discogs_xml_to_parquet_spark import tablefmt
 from discogs_xml_to_parquet_spark.functions.exact import dsum, rev_sql
 from discogs_xml_to_parquet_spark.queries.lakehouse import (
     _KEYS,
@@ -73,23 +72,11 @@ from discogs_xml_to_parquet_spark.queries.lakehouse import (
 )
 from discogs_xml_to_parquet_spark.registry import query
 from discogs_xml_to_parquet_spark.staging import work_dir as _work_dir
+from discogs_xml_to_parquet_spark.tablefmt import _stat_inventory
 
 _UPD_MOD = 3   # updates: every 3rd key inside the gate's year window
 _DEL_MOD = 5   # positional deletes: every 5th key, table-wide
-
-
-def _stat_inventory(root: str) -> dict[str, tuple[int, int]]:
-    """Data files under `root` -> (size, mtime_ns): the stat-only
-    untouched proof (the deletion_vectors.py discipline -- byte-level
-    identity stays in pytest; the in-row boolean needs only 'no file
-    rewritten, resized, or removed'). Private copy rather than an
-    import: pulling queries.deletion_vectors here would drag its two
-    queries into every driver window this module sits in."""
-    return {
-        str(p.relative_to(root)): (p.stat().st_size, p.stat().st_mtime_ns)
-        for p in sorted(Path(root).rglob("*"))
-        if p.is_file() and not p.name.startswith(("_", "."))
-    }
+_PART = ["o_year", "o_bucket"]
 
 
 def versioned_lakehouse(spark: SparkSession,
@@ -101,15 +88,9 @@ def versioned_lakehouse(spark: SparkSession,
     `_pdv_v1`. Returns (table root, facts)."""
     base = staged_lakehouse_orders(spark, sf_dir)
     table = Path(_work_dir("lh_snapshots", sf_dir))
-    table.mkdir()
-    cells = sorted(
-        str(p.relative_to(base))
-        for p in Path(base).glob("o_year=*/o_bucket=*") if p.is_dir()
-    )
+    tablefmt.init_version(table, base, _PART)
     v0 = table / "v0"
-    for c in cells:
-        (v0 / c).parent.mkdir(parents=True, exist_ok=True)
-        (v0 / c).symlink_to(Path(base) / c)
+    cells = tablefmt.partitions(v0, _PART)
     before = _stat_inventory(base)
 
     # the MERGE delta: deterministic updates the oracle re-derives
@@ -147,26 +128,12 @@ def versioned_lakehouse(spark: SparkSession,
     # as the staging, scaled to the affected cell count) so the price
     # envelopes inside rewritten cells stay skippable
     n_tasks = max(1, round(_N_RANGE_TASKS * len(aff) / len(cells)))
-    newver = tempfile.mkdtemp(prefix="spark_graft_lh_snap_new_")
-    (
+    v1 = table / tablefmt.publish_version(
+        table,
         merged.repartitionByRange(
-            n_tasks, "o_year", "o_bucket", "o_totalprice")
-        .write.mode("overwrite")
-        .partitionBy("o_year", "o_bucket")
-        .parquet(newver)
+            n_tasks, "o_year", "o_bucket", "o_totalprice"),
+        _PART,
     )
-    v1 = table / "v1"
-    for c in cells:
-        (v1 / c).parent.mkdir(parents=True, exist_ok=True)
-        if c in aff_cells:
-            shutil.move(str(Path(newver) / c), str(v1 / c))
-        else:
-            (v1 / c).symlink_to((v0 / c).resolve())
-    shutil.rmtree(newver, ignore_errors=True)
-    # atomic publish: write-temp + rename
-    ptr_tmp = table / "_current.tmp"
-    ptr_tmp.write_text("v1")
-    ptr_tmp.rename(table / "_current")
 
     # v1's positional deletion vectors: resolve the predicate ONCE,
     # store the scan's own row identity -- no key column ever rides
@@ -186,14 +153,12 @@ def versioned_lakehouse(spark: SparkSession,
     after = _stat_inventory(base)
     shared = [c for c in cells if c not in aff_cells]
     facts = {
-        "current": (table / "_current").read_text(),
+        "current": tablefmt.current_version(table),
         "n_dv_rows": n_dv_rows,
         "base_untouched": before == after,
         "storage_shared": bool(shared) and all(
             (v1 / c).resolve() == (v0 / c).resolve() for c in shared),
-        "v0_intact": sorted(
-            str(p.relative_to(v0))
-            for p in v0.glob("o_year=*/o_bucket=*")) == cells,
+        "v0_intact": tablefmt.partitions(v0, _PART) == cells,
     }
     return str(table), facts
 

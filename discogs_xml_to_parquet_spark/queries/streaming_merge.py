@@ -11,20 +11,13 @@ that (q_stream_restart); for a MERGE sink the sink itself must be
 transactional, because re-applying an increment corrupts state (+10
 becomes +20) -- the exact failure this lane's oracle would catch.
 The mechanism, shared with every real table format: the applied
-batchId set travels INSIDE the table version manifest, and data +
-log commit in ONE atomic pointer flip --
-
-  1. resolve `_current` -> version manifest (partition pointers +
-     the applied batchId set, `_applied.json`);
-  2. if this batchId is already applied -> SKIP (the replay gate);
-  3. rewrite ONLY the batch's affected month partitions (broadcast
-     join on the delta keys, +10.00 / status 'U'), new dirs under
-     the next version; untouched months are symlink pointers to the
-     previous version's dirs (O(affected) bytes, merge.py's story);
-  4. write the new manifest WITH batchId appended, then atomically
-     flip `_current`. A crash before the flip leaves an orphan
-     version dir and an unchanged table; the replay rebuilds it
-     (same name, rmtree'd first) and flips -- never a double apply.
+batchId set (`_applied.json`) travels INSIDE the version manifest, so
+data + log commit in ONE tablefmt version publish. A batchId the
+current version already lists is SKIPPED (the replay gate); otherwise
+the batch's months are rewritten (broadcast join on the delta keys,
++10.00 / status 'U') into the next version. A crash before the
+`_current` flip leaves an orphan version dir and an unchanged table;
+the replay's publish replaces the orphan -- never a double apply.
 
 The changelog shards are TIME-ALIGNED (one file per quarter of the
 1995-01..1996-06 update window, disjoint keys by construction), so
@@ -53,18 +46,14 @@ reclaims.
 from __future__ import annotations
 
 import json
-import os
 import shutil
-import tempfile
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from discogs_xml_to_parquet_spark import tablefmt
 from discogs_xml_to_parquet_spark.functions.exact import dsum, rev_sql
-from discogs_xml_to_parquet_spark.queries.merge import (
-    staged_partitioned_orders,
-)
 from discogs_xml_to_parquet_spark.queries.streaming_restart import (
     _commit_blobs,
     _committed_batches,
@@ -75,6 +64,7 @@ from discogs_xml_to_parquet_spark.staging import (
     staged as _staged,
     work_dir as _work_dir,
 )
+from discogs_xml_to_parquet_spark.tablefmt import staged_partitioned_orders
 from discogs_xml_to_parquet_spark.tables import load
 
 _UPD_MOD = 3
@@ -86,6 +76,7 @@ _FIRST_SHARDS = 3
 _DRAIN_TIMEOUT_SEC = 600
 _VERSION = 1
 _DELTA_SCHEMA = "o_orderkey BIGINT, o_month STRING"
+_PART = ["o_month"]
 
 
 def staged_delta_shards(spark: SparkSession, sf_dir: str) -> str:
@@ -122,22 +113,19 @@ def staged_delta_shards(spark: SparkSession, sf_dir: str) -> str:
     )
 
 
+def _applied_meta(applied: list[int]) -> dict[str, str]:
+    return {"_applied.json": json.dumps({"applied": applied})}
+
+
 def init_table(spark: SparkSession, sf_dir: str, root: Path) -> None:
-    """v0: symlink manifest over the shared staged base + an empty
+    """v0: pointer manifest over the shared staged base + an empty
     applied set; `_current` -> v0."""
-    base = staged_partitioned_orders(spark, sf_dir)
-    v0 = root / "v0"
-    v0.mkdir(parents=True)
-    for m in sorted(p.name for p in Path(base).glob("o_month=*")):
-        (v0 / m).symlink_to(Path(base) / m)
-    (v0 / "_applied.json").write_text(json.dumps({"applied": []}))
-    tmp = root / "_current.tmp"
-    tmp.write_text("v0")
-    os.replace(tmp, root / "_current")
+    tablefmt.init_version(root, staged_partitioned_orders(spark, sf_dir),
+                          _PART, meta=_applied_meta([]))
 
 
 def _current_version(root: Path) -> tuple[str, list[int]]:
-    cur = (root / "_current").read_text()
+    cur = tablefmt.current_version(root)
     meta = json.loads((root / cur / "_applied.json").read_text())
     return cur, meta["applied"]
 
@@ -145,44 +133,29 @@ def _current_version(root: Path) -> tuple[str, list[int]]:
 def apply_batch(spark: SparkSession, root: Path,
                 batch_df: DataFrame, batch_id: int) -> str:
     """One transactional MERGE: skip if this batchId already committed
-    (the at-least-once replay gate), else rewrite the batch's months
-    into the next version and flip `_current` -- data and the applied
-    set commit in one atomic rename. Returns 'skipped' or the new
-    version name."""
+    (the at-least-once replay gate), else publish the batch's months
+    as the next version with the applied set in its manifest -- data
+    and the applied set commit in one `_current` flip. Returns
+    'skipped' or the new version name."""
     cur, applied = _current_version(root)
     if batch_id in applied:
         return "skipped"
     # learn the batch's months from a filesystem listing of its own
-    # partitioned spill (no driver-side collect -- merge.py's rule).
-    # BOTH scratch dirs are freed in the finally: the lane's designed
-    # mid-batch kill interrupts this function near-every run, and an
-    # un-freed spill/newver is a full quarter of rewritten partitions
-    # leaked OUTSIDE the bounded work_dir root, per run -- the exact
-    # /tmp-growth class staging.work_dir exists to stop.
-    spill = tempfile.mkdtemp(prefix="spark_graft_smbatch_")
-    newver = None
-    try:
-        batch_df.write.mode("overwrite").partitionBy(
-            "o_month").parquet(spill)
-        months = sorted(
-            d.name for d in Path(spill).glob("o_month=*") if d.is_dir())
-        vname = f"v{len(applied) + 1}"
-        vdir = root / vname
-        if vdir.exists():        # orphan of a crashed attempt: rebuild
-            shutil.rmtree(vdir)
-        if not months:           # empty batch commits only metadata
-            vdir.mkdir()
-            for m in sorted(
-                    p.name for p in (root / cur).glob("o_month=*")):
-                (vdir / m).symlink_to((root / cur / m).resolve())
-        else:
-            month_vals = [m.split("=", 1)[1] for m in months]
-            current_read = spark.read.parquet(str(root / cur)).filter(
-                F.col("o_month").isin(month_vals))
-            keys = spark.read.parquet(spill).select(
+    # partitioned spill (no driver-side collect -- merge.py's rule);
+    # the lane's designed mid-batch kill interrupts this near-every
+    # run, so the spill lives in a scratch freed on every exit
+    with tablefmt.scratch_dir(root) as spill:
+        batch_df.write.mode("overwrite").partitionBy(*_PART).parquet(
+            str(spill))
+        months = [m.split("=", 1)[1]
+                  for m in tablefmt.partitions(spill, _PART)]
+        merged = spark.read.parquet(str(root / cur)).filter(
+            F.col("o_month").isin(months))
+        if months:   # an empty batch commits only metadata
+            keys = spark.read.parquet(str(spill)).select(
                 "o_orderkey").withColumn("_hit", F.lit(True))
             merged = (
-                current_read.join(F.broadcast(keys), "o_orderkey", "left")
+                merged.join(F.broadcast(keys), "o_orderkey", "left")
                 .select(
                     "o_orderkey", "o_custkey",
                     F.when(F.col("_hit"), F.lit("U"))
@@ -194,26 +167,8 @@ def apply_batch(spark: SparkSession, root: Path,
                     "o_orderdate", "o_orderpriority", "o_month",
                 )
             )
-            newver = tempfile.mkdtemp(prefix="spark_graft_smver_")
-            merged.write.mode("overwrite").partitionBy(
-                "o_month").parquet(newver)
-            vdir.mkdir()
-            for m in months:
-                shutil.move(str(Path(newver) / m), str(vdir / m))
-            for m in sorted(
-                    p.name for p in (root / cur).glob("o_month=*")):
-                if m not in months:
-                    (vdir / m).symlink_to((root / cur / m).resolve())
-        (vdir / "_applied.json").write_text(
-            json.dumps({"applied": applied + [batch_id]}))
-        tmp = root / "_current.tmp"
-        tmp.write_text(vname)
-        os.replace(tmp, root / "_current")   # THE commit point
-        return vname
-    finally:
-        shutil.rmtree(spill, ignore_errors=True)
-        if newver is not None:
-            shutil.rmtree(newver, ignore_errors=True)
+        return tablefmt.publish_version(
+            root, merged, _PART, meta=_applied_meta(applied + [batch_id]))
 
 
 def run_merge_sink_lane(

@@ -18,8 +18,7 @@ what makes it nearly free:
     month costs the same as a 2 MB one);
   - the ONE month the cutoff date falls inside: a copy-on-write
     rewrite of that single partition keeping rows >= the cutoff
-    (merge.py's new-files + atomic-dir-swap discipline, scoped to
-    one partition);
+    (tablefmt's in-place partition swap, scoped to one partition);
   - every younger month: untouched, byte-identical.
 
 Both halves ride in the driver row, the merge.py pattern: the oracle
@@ -44,32 +43,27 @@ harness isolation (the lane mutates its table), same as merge.py.
 from __future__ import annotations
 
 import shutil
-import tempfile
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from discogs_xml_to_parquet_spark import tablefmt
 from discogs_xml_to_parquet_spark.functions.exact import dsum, rev_sql
-from discogs_xml_to_parquet_spark.queries.merge import (
+from discogs_xml_to_parquet_spark.registry import query
+from discogs_xml_to_parquet_spark.staging import work_dir as _work_dir
+from discogs_xml_to_parquet_spark.tablefmt import (
     _inventory,
     _link_or_copy,
     staged_partitioned_orders,
 )
-from discogs_xml_to_parquet_spark.registry import query
-from discogs_xml_to_parquet_spark.staging import work_dir as _work_dir
 
 _CUTOFF = "1998-07-15"          # retain o_orderdate >= this
 _CUTOFF_MONTH = "1998-07"       # the partition the cutoff cuts through
 
 
-# _link_or_copy moved to merge.py (r14 optimization round): the MERGE
-# lane adopted the same hardlink-clone isolation, and merge.py is
-# already this module's import source for the shared inventory helper.
-
-
 def _inventory_young(table: str) -> dict[str, tuple[int, str]]:
-    """merge.py's _inventory restricted to the partitions the policy
+    """tablefmt's _inventory restricted to the partitions the policy
     must NOT touch (months after the boundary). Restricting it is
     load-bearing twice over: inventorying the whole table would (a)
     md5-read every EXPIRED byte driver-side, falsifying the lane's
@@ -102,22 +96,14 @@ def enforce_ttl(spark: SparkSession, table: str) -> dict:
     boundary_rewritten = False
     if boundary in months:
         kept = (
-            spark.read.parquet(f"{table}/{boundary}")
+            spark.read.option("basePath", table)
+            .parquet(f"{table}/{boundary}")
             .filter(F.col("o_orderdate")
                     >= F.lit(_CUTOFF).cast("timestamp"))
         )
-        newver = tempfile.mkdtemp(prefix="spark_graft_ttl_")
-        try:
-            kept.write.mode("overwrite").parquet(newver)
-            dst = Path(table) / boundary
-            shutil.rmtree(dst)
-            # move data files only; _SUCCESS stays behind
-            dst.mkdir()
-            for p in sorted(Path(newver).glob("part-*")):
-                shutil.move(str(p), str(dst / p.name))
-            boundary_rewritten = True
-        finally:
-            shutil.rmtree(newver, ignore_errors=True)
+        tablefmt.swap_partitions(table, kept, ["o_month"],
+                                 listed=[boundary])
+        boundary_rewritten = True
 
     after_young = _inventory_young(table)
     return {
@@ -168,15 +154,9 @@ def q_retention_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     row even before the checksums do."""
     base = staged_partitioned_orders(spark, sf_dir)
     scratch = _work_dir("ttl_scratch", sf_dir)
-    # hardlink clone (r12): the scratch copy is HARNESS isolation, not
-    # part of the operator -- a byte copy would bill O(table) I/O to a
-    # lane whose claim is O(1)/partition + O(boundary) and dominate its
-    # 10x bench wall. Enforcement never modifies file CONTENT in place
-    # (expired dirs are unlinked; the boundary dir is REPLACED with new
-    # files), so links are safe: the shared base's inodes stay
-    # untouched, pinned by test_ttl's base-inventory check.
-    shutil.copytree(base, scratch, copy_function=_link_or_copy,
-                    dirs_exist_ok=True)
+    # hardlink clone; expired dirs are unlinked, never written through,
+    # and test_ttl's base-inventory check pins the base's inodes
+    shutil.copytree(base, scratch, copy_function=_link_or_copy)
     facts = enforce_ttl(spark, scratch)
     return (
         spark.read.parquet(scratch)

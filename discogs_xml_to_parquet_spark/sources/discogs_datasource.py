@@ -1,10 +1,8 @@
 """The Discogs releases source as a Spark 4 Python DataSource -- a
-registerable `format("discogs_releases")` connector.
-
-The repo's other three conversion lanes are FUNCTIONS a caller must
-import (`read_releases`, `read_releases_permissive`,
-`read_releases_strict`); this one is a CONNECTOR: after
-`register_discogs_source(spark)`, any consumer reads the dump with
+registerable `format("discogs_releases")` connector, and the strict
+conversion lane's one read path (`read_releases_strict` registers it
+and reads through it). After `register_discogs_source(spark)`, any
+consumer reads the dump with
 
     spark.read.format("discogs_releases").load("/path/to/dumps")
 
@@ -14,24 +12,14 @@ to the Python reader, verified empirically, so the path-bearing load
 must happen DataFrame-side; tests pin the view route.)
 
 and gets OUTPUT_SCHEMA rows with the reference's strict rejection
-semantics (main.rs:32-55 error model), because the executor-side
-parse IS the strict lane's parser (`_parse_file_stream`): one
-InputPartition per dump file (gzip is unsplittable -- the same
-per-file parallelism every other lane uses, main.rs:63-71's own
-constraint), incremental pyarrow.fs streams, O(1 release) memory.
-
-Spark's Python DataSource API runs `read()` on executors and ships
-rows back as Arrow batches, so the connector inherits the
-vectorized transfer path without any UDF plumbing; the driver only
-ever sees the file listing (`partitions()`, metadata-sized).
-
-Why a fourth lane: at 100 TB the ingest entrypoint should be a
-catalog-registerable source, not a library function -- downstream
-users point a table at the dump directory and never import this
-package. Parity with the native lane is pinned by
-tests/test_datasource.py (row-identical output on the full fixture
-corpus) and by the q_source_python_datasource driver row
-(hash-matched against the generator-derived expected parquet).
+semantics (main.rs:32-55 error model) from the strict parser
+(`_parse_file_stream`): one InputPartition per dump file (gzip is
+unsplittable -- the same per-file parallelism every other lane uses,
+main.rs:63-71's own constraint), incremental pyarrow.fs streams, O(1
+release) memory. Rows go back to the JVM as Arrow batches; the driver
+only ever sees the file listing (`partitions()`, metadata-sized).
+Parity with the native lane is pinned by tests/test_datasource.py and
+by the q_source_python_datasource driver row.
 
 The SAME registration also serves `spark.readStream` (the
 `streamReader` below): an append-only drop directory ingested

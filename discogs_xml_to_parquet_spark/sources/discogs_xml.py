@@ -15,12 +15,13 @@ This module re-expresses it Spark-first, twice:
    same single-stream-per-file behavior the reference has, times N
    files).
 
-2. ``read_releases_strict``: a pure-PySpark fallback parser (a path
-   RDD + incremental pyarrow.fs streams + stdlib ``xml.etree.iterparse``
-   over the gzip stream) that reproduces the reference's *exact* rejection
-   semantics, which the native source is too lenient for:
-   unknown child element of <release> (main.rs:549-554), unknown
-   attribute on <release> (main.rs:496-500), malformed
+2. ``read_releases_strict``: a pure-Python parser (incremental
+   pyarrow.fs streams + stdlib ``xml.etree.iterparse`` over the gzip
+   stream), read through the ``discogs_releases`` Python DataSource
+   (sources/discogs_datasource.py), that reproduces the reference's
+   *exact* rejection semantics, which the native source is too
+   lenient for: unknown child element of <release> (main.rs:549-554),
+   unknown attribute on <release> (main.rs:496-500), malformed
    ``is_main_release`` (main.rs:826-830). One Python task per file --
    identical parallelism to the native path for .gz input.
 
@@ -344,6 +345,8 @@ def _parse_release_elem(elem) -> tuple:
                     f"malformed is_main_release: {imr!r}")
             master_id = int(child.text)  # main.rs:846 str->u32
 
+    if title is None:  # title is a non-nullable output column
+        raise ValueError("<release> missing <title> element")
     return (int(rid), status, title, artists, genres, styles, labels,
             is_main_release, master_id)
 
@@ -479,21 +482,24 @@ def _list_input_files(path: str, allow_empty: bool = False) -> list[str]:
 
 
 def read_releases_strict(spark: SparkSession, path: str) -> DataFrame:
-    """Strict path: reference-exact rejection semantics, pure PySpark.
+    """Strict path: reference-exact rejection semantics, pure Python,
+    through the `discogs_releases` DataSource -- one partition per
+    file, each an incremental pyarrow.fs stream feeding iterparse, so
+    executor memory stays O(1 release) regardless of file size. Used
+    for conformance testing and as the fallback when the XML source
+    is unavailable.
 
-    File paths (not file bytes) are distributed -- one task per file,
-    the same per-file parallelism gzip permits the native path -- and
-    each task opens its file as an incremental pyarrow.fs stream feeding
-    iterparse, so executor memory stays O(1 release) regardless of file
-    size (binaryFiles, the previous spelling, materialized the whole
-    gzipped file as one byte array per task: an OOM at multi-GB dumps).
-    Used for conformance testing and as the fallback when the XML
-    source is unavailable.
-    """
-    paths = _list_input_files(path)
-    rdd = spark.sparkContext.parallelize(paths, max(len(paths), 1))
-    rows = rdd.flatMap(_parse_file_stream)
-    return spark.createDataFrame(rows, OUTPUT_SCHEMA)
+    The listing runs here, eagerly, although the source lists again
+    when it plans: the source's own listing runs only once an action
+    plans the scan, after convert()'s overwrite has already cleared
+    the output, so an empty input must raise before that."""
+    from discogs_xml_to_parquet_spark.sources.discogs_datasource import (
+        register_discogs_source,
+    )
+
+    _list_input_files(path)
+    register_discogs_source(spark)
+    return spark.read.format("discogs_releases").load(path)
 
 
 def convert(spark: SparkSession, in_path: str, out_path: str,

@@ -15,9 +15,13 @@ from types import SimpleNamespace
 from bench import _LINE_BUDGET, compact_line
 
 
-def _full(n_queries: int, n_sf1: int = 12, name_len: int = 16) -> dict:
-    qs = {f"q_{i:03d}_".ljust(name_len, "x"): 1.234 + i / 997
-          for i in range(n_queries)}
+def _names(n: int, prefix: str = "q_", name_len: int = 16) -> list[str]:
+    return [f"{prefix}{i:03d}_".ljust(name_len, "x") for i in range(n)]
+
+
+def _full(names: list[str], sf1_names: list[str]) -> dict:
+    """A full bench dict with 6-character medians (12.345 s)."""
+    qs = {n: 12.345 for n in names}
     return {
         "metric": "headline_query_wall_sec",
         "value": round(sum(qs.values()), 3),
@@ -43,7 +47,7 @@ def _full(n_queries: int, n_sf1: int = 12, name_len: int = 16) -> dict:
             f"q_lt_{i}": 0.5 for i in range(5)}},
         "sf1_spot": {
             "sf": 1.0,
-            "queries": {f"q_sf1_{i:02d}x": 12.345 for i in range(n_sf1)},
+            "queries": {n: 12.345 for n in sf1_names},
             "passes": 3, "over_budget": False,
             "eff_cores": [17.0, 16.5, 18.2],
             "spin_sec": [0.113, 0.118, 0.111],
@@ -52,14 +56,20 @@ def _full(n_queries: int, n_sf1: int = 12, name_len: int = 16) -> dict:
 
 
 def test_current_shape_fits_with_all_sections():
-    """Today's real shape (~31 headline queries, 12 sf1, 5 longtail)
-    must fit WITHOUT any trimming."""
-    line = compact_line(_full(31))
+    """Today's real shape (bench.HEADLINE and bench.SF1_QUERIES, 3-dp
+    medians) must fit WITHOUT any trimming. The longtail lane is
+    BENCH_DETAIL-only: with it the line never fit."""
+    import bench
+
+    line = compact_line(_full(bench.HEADLINE, bench.SF1_QUERIES))
     assert len(line) <= _LINE_BUDGET
     d = json.loads(line)
     for k in ("metric", "value", "unit", "queries", "sf"):
         assert k in d
-    assert d["longtail"] and d["sf1"]["queries"]  # nothing trimmed
+    assert "longtail" not in d
+    # nothing trimmed: every median at full precision, sf1 per-query
+    assert d["queries"] == {n: 12.345 for n in bench.HEADLINE}
+    assert d["sf1"]["queries"] == {n: 12.345 for n in bench.SF1_QUERIES}
     assert "queries_omitted" not in d
     # the contamination-filtered headline rides next to the raw one
     assert d["value_filtered"] == d["value"]
@@ -67,9 +77,9 @@ def test_current_shape_fits_with_all_sections():
 
 
 def test_trim_ladder_drops_ballast_before_queries():
-    """At ~2x growth the ballast goes (longtail, precision, per-query
-    sf1) while every headline median survives."""
-    line = compact_line(_full(60, n_sf1=20))
+    """At ~2x growth the ballast goes (precision, per-query sf1)
+    while every headline median survives."""
+    line = compact_line(_full(_names(60), _names(20, "q_sf1_")))
     assert len(line) <= _LINE_BUDGET
     d = json.loads(line)
     assert "longtail" not in d
@@ -82,7 +92,7 @@ def test_trim_ladder_drops_ballast_before_queries():
 def test_budget_holds_under_extreme_growth_with_explicit_omission():
     """The last-resort cap is EXPLICIT, never silent: kept slowest-K
     plus a queries_omitted count that accounts for every query."""
-    line = compact_line(_full(300, n_sf1=40, name_len=30))
+    line = compact_line(_full(_names(300, name_len=30), _names(40, "q_sf1_")))
     assert len(line) <= _LINE_BUDGET
     d = json.loads(line)
     assert d["queries_omitted"] + len(d["queries"]) == 300
@@ -91,7 +101,7 @@ def test_budget_holds_under_extreme_growth_with_explicit_omission():
 
 
 def test_no_sf1_lane_is_allowed():
-    full = _full(31)
+    full = _full(_names(31), [])
     full["sf1_spot"] = None
     d = json.loads(compact_line(full))
     assert d["sf1"] is None

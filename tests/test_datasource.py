@@ -32,7 +32,7 @@ def _corpus_paths() -> tuple[str, str]:
 
 def test_datasource_matches_native_lane(spark):
     """Row-identical nested output vs the native XML source on the
-    full 153-release fixture corpus -- the connector is a fourth
+    full 153-release fixture corpus -- the connector is the strict
     conformance lane, not a new dialect."""
     register_discogs_source(spark)
     small, big = _corpus_paths()
@@ -72,6 +72,36 @@ def test_datasource_strict_error_model(spark, tmp_path):
         b"<title>t</title></release>\n</releases>"))
     with pytest.raises(Exception, match="unknown attribute"):
         spark.read.format("discogs_releases").load(str(bad)).collect()
+
+
+def test_datasource_rejects_release_without_title(spark, tmp_path):
+    """title is a non-nullable output column: a <release> without
+    <title> is rejected by the parser itself, with a message naming
+    the element, not by a null check downstream."""
+    register_discogs_source(spark)
+    bad = tmp_path / "notitle.xml.gz"
+    bad.write_bytes(gzip.compress(
+        b'<releases>\n<release id="9" status="Accepted">'
+        b"<genres><genre>Rock</genre></genres></release>\n</releases>"))
+    with pytest.raises(Exception, match="missing <title>"):
+        spark.read.format("discogs_releases").load(str(bad)).collect()
+
+
+def test_strict_convert_of_empty_input_keeps_output(spark, tmp_path):
+    """The strict lane lists its input before the write: an empty
+    input raises while a previous conversion's output is intact (the
+    source's own listing runs after the overwrite cleared it)."""
+    from discogs_xml_to_parquet_spark.sources.discogs_xml import convert
+
+    small, _ = _corpus_paths()
+    out = str(tmp_path / "out")
+    convert(spark, small, out, strict=True)
+    n = spark.read.parquet(out).count()
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    with pytest.raises(ValueError, match="no input files"):
+        convert(spark, str(empty), out, strict=True)
+    assert spark.read.parquet(out).count() == n == 3
 
 
 def test_datasource_empty_listing_raises(spark, tmp_path):

@@ -17,7 +17,7 @@ from discogs_xml_to_parquet_spark.queries.deletion_vectors import (
     mor_read,
     write_deletion_vectors,
 )
-from discogs_xml_to_parquet_spark.queries.merge import (
+from discogs_xml_to_parquet_spark.tablefmt import (
     _inventory,
     staged_partitioned_orders,
 )

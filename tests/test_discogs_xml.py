@@ -154,7 +154,7 @@ def test_strict_rejects_empty_artist_id_and_name(spark):
     """empty->null applies only to anv/join (main.rs:721-740); an empty
     <id> or <name> hits expect_text on an End event and errors
     (ADVICE r1)."""
-    base = ('<releases>\n<release id="9" status="Draft">'
+    base = ('<releases>\n<release id="9" status="Draft"><title>t</title>'
             '<artists><artist>{fields}</artist></artists></release>\n</releases>')
     with pytest.raises(ValueError, match="empty <id>"):
         _strict_rows(spark, base.format(fields="<id></id><name>n</name>"))

@@ -92,7 +92,7 @@ def test_join_refresh_scans_are_all_partition_pruned(spark):
         join_view_refresh,
         staged_lineitem_by_shipmonth,
     )
-    from discogs_xml_to_parquet_spark.queries.merge import (
+    from discogs_xml_to_parquet_spark.tablefmt import (
         staged_partitioned_orders,
     )
     from tests.test_plans import plan_of
@@ -123,7 +123,7 @@ def test_join_delta_terms_are_disjoint_and_nonvacuous(spark):
         join_view_base,
         staged_lineitem_by_shipmonth,
     )
-    from discogs_xml_to_parquet_spark.queries.merge import (
+    from discogs_xml_to_parquet_spark.tablefmt import (
         staged_partitioned_orders,
     )
 
@@ -165,7 +165,7 @@ def test_join_refresh_equals_recompute(spark):
         join_view_refresh,
         staged_lineitem_by_shipmonth,
     )
-    from discogs_xml_to_parquet_spark.queries.merge import (
+    from discogs_xml_to_parquet_spark.tablefmt import (
         staged_partitioned_orders,
     )
     from discogs_xml_to_parquet_spark.functions.exact import unscale

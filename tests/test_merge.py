@@ -16,6 +16,9 @@ from discogs_xml_to_parquet_spark.queries.merge import (
     delta_frame,
     merge_upsert,
     run_merge,
+)
+from discogs_xml_to_parquet_spark.tablefmt import (
+    _inventory,
     staged_partitioned_orders,
 )
 from tests.conftest import SF_SMOKE
@@ -112,10 +115,7 @@ def test_merge_empty_delta_is_noop(spark):
     """A delta with zero rows must leave the table byte-identical --
     no partition rewritten, no file touched (the guard a scheduled
     MERGE job relies on when a feed goes quiet)."""
-    from discogs_xml_to_parquet_spark.queries.merge import (
-        _COLS,
-        _inventory,
-    )
+    from discogs_xml_to_parquet_spark.queries.merge import _COLS
 
     base = staged_partitioned_orders(spark, SF_SMOKE)
     scratch = tempfile.mkdtemp(prefix="spark_graft_merge_empty_")
@@ -137,8 +137,6 @@ def test_merge_out_of_window_delta_raises(spark):
     rows. The merge must abort BEFORE the swap and leave the table
     byte-identical."""
     import pytest
-
-    from discogs_xml_to_parquet_spark.queries.merge import _inventory
 
     base = staged_partitioned_orders(spark, SF_SMOKE)
     scratch = tempfile.mkdtemp(prefix="spark_graft_merge_oow_")

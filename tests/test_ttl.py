@@ -10,14 +10,14 @@ from pathlib import Path
 
 from pyspark.sql import functions as F
 
-from discogs_xml_to_parquet_spark.queries.merge import (
-    _inventory,
-    staged_partitioned_orders,
-)
 from discogs_xml_to_parquet_spark.queries.ttl import (
     _CUTOFF,
     _CUTOFF_MONTH,
     enforce_ttl,
+)
+from discogs_xml_to_parquet_spark.tablefmt import (
+    _inventory,
+    staged_partitioned_orders,
 )
 from tests.conftest import SF_SMOKE
 

@@ -31,19 +31,28 @@ DERIVED_AT_ROUND = 15
 
 # Policy inputs that artifacts cannot express -- queries whose code
 # changed since their LAST green driver row (r15 for most, r10 for the
-# quality_model/multimodal_audio/decontam/scoring lanes):
+# quality_model/multimodal_audio/decontam/scoring lanes, r11-r13 for
+# the table-format lanes):
 # - the three connected-components consumers moved from min-label
 #   rounds onto the size-dispatched operators/graph.py entry point;
 # - the tables.load_spread users, whose spread went from a fixed 64
 #   partitions to defaultParallelism (q_curation_pipeline is also the
-#   dispatcher's original consumer).
+#   dispatcher's original consumer);
+# - the table-format queries, whose commits moved into tablefmt.py.
 CHANGED = frozenset({
     "q_dedup_components", "q_curation_keep_best", "q_entity_resolution",
     "q_curation_pipeline", "q_dedup_minhash_lsh", "q_dedup_simhash_banded",
     "q_decontaminate_ngram", "q_quality_classifier",
     "q_multimodal_audio_energy", "q_tfidf_top_terms",
     "q_text_fingerprint", "q_dedup_chunks",
+    "q_merge_upsert", "q_time_travel", "q_table_diff",
+    "q_vacuum_retention", "q_snapshot_read", "q_stream_merge_sink",
+    "q_delete_merge_on_read", "q_delete_positional_dv", "q_retention_ttl",
 })
+# CHANGED members the 50-query cut leaves out: with module siblings
+# and import deps the changed set is 53 queries, and these come last
+# in registration order among equals
+CHANGED_PAST_CUT = frozenset({"q_retention_ttl", "q_snapshot_read"})
 PIN: tuple[str, ...] = ()
 
 
@@ -108,16 +117,17 @@ def test_window_contains_every_never_checked_query():
 
 def test_r16_window_contents():
     """The round-16 membership decisions, pinned explicitly: every
-    CHANGED query is in, with its module and the modules it imports
-    (matching, then dedup and the curation_full fold, clustering +
-    curation_extra, text_analysis, then the r10-evidence
-    quality_model, multimodal_audio, decontam and scoring), and the
-    rest of the window goes to the oldest (r9) evidence: windows,
-    subqueries and semistructured, where the 50-cut lands. The
-    r9-evidence set shrinks to 15 (q_json_struct, relational, scalars,
-    similarity -- first in line next round)."""
+    CHANGED query but the two the cut leaves out is in, with its
+    module and the modules it imports (matching, then dedup and the
+    curation_full fold, clustering + curation_extra, text_analysis,
+    then the r10-evidence quality_model, multimodal_audio, decontam and
+    scoring, then the table-format modules merge, streaming_merge with
+    its streaming_restart dep, and deletion_vectors), where the 50-cut
+    lands. ttl and snapshot_read (with its lakehouse dep) are first in
+    line next round, then the r9-evidence cohort."""
     win = list(registry.QUERIES)[:WINDOW_SIZE]
-    assert CHANGED <= set(win), sorted(CHANGED - set(win))
+    assert CHANGED - set(win) == CHANGED_PAST_CUT, sorted(
+        CHANGED - set(win))
     for must in (
         # matching and dedup ride their CHANGED members
         "q_fuzzy_levenshtein", "q_fuzzy_blocked_stats",
@@ -130,19 +140,21 @@ def test_r16_window_contents():
         # r10-evidence siblings of CHANGED load_spread users
         "q_quality_rare_bigrams", "q_decontaminate_bloom",
         "q_bm25_search", "q_inverted_index",
-        # the oldest evidence fills the rest
-        "q_window_rank_dense", "q_subquery_scalar",
-        "q_subquery_correlated", "q_subquery_in",
+        # streaming_merge's import dep
+        "q_stream_restart",
     ):
         assert must in win, must
-    assert win[0] == "q_fuzzy_levenshtein"  # matching leads
-    assert win[-1] == "q_map_funcs"         # cut inside semistructured
+    assert win[0] == "q_fuzzy_levenshtein"      # matching leads
+    assert win[-1] == "q_delete_positional_dv"  # cut after deletion_vectors
+    after = list(registry.QUERIES)[WINDOW_SIZE:]
+    assert after[:3] == [
+        "q_retention_ttl", "q_lakehouse_read_path", "q_snapshot_read"]
     for out in (
-        # r9-green past the cut: first in line next round
+        # r9-green past the cut
+        "q_window_rank_dense", "q_subquery_scalar", "q_map_funcs",
         "q_json_struct", "q1_pricing_summary", "q_filter_project",
         "q_string_funcs", "q_ann_bruteforce_topk", "q_ann_lsh_buckets",
         # r15-green, unchanged: rotated out
-        "q_snapshot_read", "q_lakehouse_read_path",
         "q_setsim_prefix_join", "q_pagerank_bipartite",
         "q_label_propagation", "q_join_bucketed", "q_join_bloom_dpp",
         "q_source_binaryfile", "q4_order_priority", "q_zorder_layout",
@@ -158,13 +170,14 @@ def test_module_deps_reflect_imports():
     modules forward must see the known edges (ast-based since r8 --
     ADVICE r7: the old regex dropped all but the first name of a
     multi-module import) -- and must NOT see edges to the shared
-    staging helpers, which live outside the queries package precisely
-    so consumers don't drag a query module into the window."""
+    staging and table-format helpers, which live outside the queries
+    package precisely so consumers don't drag a query module into the
+    window."""
     deps = registry._module_deps()
     assert set(deps["curation_full"]) >= {"dedup", "packing", "quality"}
     assert "clustering" in deps["curation_extra"]
-    assert "merge" in deps["deletion_vectors"]
-    assert "merge" in deps["incremental"]
+    assert "streaming_restart" in deps["streaming_merge"]
+    assert [m for m, d in deps.items() if "merge" in d] == []
     for consumer in ("binary_source", "schema_evolution",
                      "streaming_restart", "compaction"):
         assert "runtime_filters" not in deps.get(consumer, []), consumer
